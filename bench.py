@@ -13,9 +13,13 @@ the steady-state cost; best-of-3 reports the per-query time a warmed
 cluster would see).  The SAME repeat count applies to every query and
 to the streaming measurement - per-query extras would bias exactly the
 recently-modified code paths downward and break cross-round
-comparability.  The DataFrame cache is cleared between every
-execution so a repeat can never reuse intermediates the previous run
-cached (shingle tables etc.) - only JVM code compilation carries over.
+comparability.  Timing, cache clearing, best-of-N and the one-line
+output come from tools/harness.py, shared with the stress, A/B and
+plan tools.
+
+Artifacts: this entry point owns ``bench_last.json`` (the full-precision
+record of the last full-suite run; focused BENCH_QUERIES runs never
+rewrite it) and the one JSON line on stdout.
 """
 
 from __future__ import annotations
@@ -24,10 +28,11 @@ import json
 import os
 import re
 import sys
-import time
 
 from iceberg_daq_spark.registry import all_queries
-from iceberg_daq_spark.session import get_spark
+from tools import harness
+
+LAST_PATH = os.path.join(harness.REPO, "bench_last.json")
 
 
 def sf_from_dir(sf_dir: str) -> float:
@@ -36,11 +41,21 @@ def sf_from_dir(sf_dir: str) -> float:
 
 
 def find_regressions(
-    prev: dict[str, float], timings: dict[str, float]
+    last: dict, timings: dict[str, float], cpus: int
 ) -> dict[str, list[float]]:
     """Queries more than 2x slower than the previous committed record
-    (sub-50 ms priors are skipped: those flip on scheduler noise).
-    Returns {name: [prev_sec, now_sec]}."""
+    ``last`` (sub-50 ms priors are skipped: those flip on scheduler
+    noise).  Returns {name: [prev_sec, now_sec]}.  A record taken on a
+    different core count, or one that predates the ``cpus`` field, is
+    not comparable: the tripwire is skipped with a note on stderr."""
+    if last.get("cpus") != cpus:
+        print(
+            f"# regression tripwire skipped: previous record ran on "
+            f"{last.get('cpus', 'unrecorded')} cpus, this run on {cpus}",
+            file=sys.stderr,
+        )
+        return {}
+    prev = last.get("queries", {})
     out: dict[str, list[float]] = {}
     for name, t in timings.items():
         p = prev.get(name)
@@ -54,50 +69,22 @@ def main() -> None:
     repeat = int(os.environ.get("BENCH_REPEAT", "3"))
     only = os.environ.get("BENCH_QUERIES")
     specs = all_queries()
-    names = sorted(specs)
-    # q29 runs two full availableNow streaming replays (watermark golden,
-    # ~30 s of micro-batch scheduling, independent of sf) - the streaming
-    # data plane's throughput is benchmarked by measure_streaming below,
-    # so the batch suite skips it unless explicitly requested.
-    if not only:
-        names = [n for n in names if not n.startswith("q29")]
     if only:
-        wanted = {w.strip() for w in only.split(",")}
-        names = [n for n in names if any(n.startswith(w) for w in wanted)]
+        names = sorted(harness.match_queries(only.split(",")))
+    else:
+        # q29 runs two full availableNow streaming replays (watermark
+        # golden, ~30 s of micro-batch scheduling, independent of sf) -
+        # the streaming data plane's throughput is benchmarked by
+        # measure_streaming below, so the batch suite skips it unless
+        # explicitly requested.
+        names = [n for n in sorted(specs) if not n.startswith("q29")]
 
-    spark = get_spark(app_name="iceberg_daq_bench")
-    # warm the JVM + parquet footers once, outside timing
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-
-    from iceberg_daq_spark.queries import llm
+    spark = harness.start("iceberg_daq_bench", sf_dir)
+    cpus = spark.sparkContext.defaultParallelism
 
     timings: dict[str, float] = {}
     for name in names:
-        fn = specs[name].fn
-        best = None
-        for _ in range(repeat):
-            if name.startswith("q57"):
-                # q57 owns the shared pair/CC stage: reset the handle so
-                # every q57 repeat times the FULL closure (no
-                # self-reuse across repeats - same honesty rule as
-                # clearCache below).  q73, which runs later in sorted
-                # order, then reuses the stage q57's last repeat left -
-                # the stored-dedup-groups-table shape of a real
-                # pipeline, deliberately reflected here.
-                llm._DEDUP_GROUPS_CACHE.clear()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-        # NOTE on GC: stress_bench GCs between repeats because at 10x
-        # rows the heavy pair joins otherwise time their repeats under
-        # the previous run's dead 30M-row shuffle (3-4x inflation).
-        # At sf0.1 that debris effect is immeasurable, while an
-        # explicit System.gc() here leaks concurrent G1 phases INTO
-        # the next timed region (+0.1-0.2s on every one of 229
-        # queries, measured) - so this loop deliberately does NOT gc.
-        timings[name] = round(best, 3)
+        timings[name] = round(harness.best_of(spark, specs[name].fn, sf_dir, repeat), 3)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     # regression tripwire: a per-query slowdown > 2x vs the previous
@@ -105,17 +92,14 @@ def main() -> None:
     # a plan change (q117's 62 s co-presence blow-up ran two full
     # rounds of local benches without this being called out).  Loud on
     # stderr, and recorded in the JSON so the round artifact shows it.
-    last_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_last.json"
-    )
-    prev = {}
-    if os.path.exists(last_path):
+    last = {}
+    if os.path.exists(LAST_PATH):
         try:
-            with open(last_path) as fh:
-                prev = json.load(fh).get("queries", {})
+            with open(LAST_PATH) as fh:
+                last = json.load(fh)
         except (ValueError, OSError):
-            prev = {}
-    regressions = find_regressions(prev, timings)
+            last = {}
+    regressions = find_regressions(last, timings, cpus)
     for name, (p, t) in regressions.items():
         print(
             f"# !!! REGRESSION {name}: {p:.3f}s -> {t:.3f}s "
@@ -134,6 +118,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_from_dir(sf_dir),
+        "cpus": cpus,
     }
     # Floor separation (round-13 verdict #7, ADDITIONS ONLY - nothing
     # above is renamed or re-timed): at 260+ queries x local-mode
@@ -151,12 +136,7 @@ def main() -> None:
         ),
         3,
     )
-    floor_one = None
-    for _ in range(5):
-        t0 = time.perf_counter()
-        spark.range(1).write.mode("overwrite").format("noop").save()
-        dt = time.perf_counter() - t0
-        floor_one = dt if floor_one is None else min(floor_one, dt)
+    floor_one = harness.best_of(spark, lambda s, _: s.range(1), sf_dir, 5)
     out["floor_sec"] = round(len(timings) * floor_one, 3)
     if streaming:
         out["streaming"] = streaming
@@ -167,67 +147,8 @@ def main() -> None:
     # depend on that window.  Focused runs (BENCH_QUERIES) must not
     # clobber the full-suite record.
     if not only:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_last.json"), "w") as fh:
-            json.dump(out, fh, indent=1)
-            fh.write("\n")
-    print(emit_line(out))
-
-
-# The driver records the last N chars of stdout and parses the final
-# JSON line out of it; a line longer than the window can never parse
-# (rounds 2/3/5 lost the suite total this way).  Degrade per-query
-# precision until the line fits - the full-precision record is in
-# bench_last.json either way.
-_TAIL_WINDOW = 1990
-
-
-def emit_line(out: dict) -> str:
-    # degrade precision, then shorten query names to their qNN prefix
-    # (still unique and joinable to BASELINE), before ever dropping
-    # per-query data
-    def variants():
-        for short in (False, True):
-            for ndigits in (3, 2, 1):
-                yield short, ndigits
-
-    for short, ndigits in variants():
-        o = dict(out)
-        o["queries"] = {
-            (k.split("_")[0] if short else k): round(v, ndigits)
-            for k, v in out["queries"].items()
-        }
-        if len(o["queries"]) != len(out["queries"]):
-            continue  # prefix collision: stay with full names
-        line = json.dumps(o, separators=(",", ":"))
-        if len(line) <= _TAIL_WINDOW:
-            return line
-    # next resort: the suite has outgrown the window even at qNN/1-digit
-    # (176+ queries x ~11 chars > 1990).  Keep the BASELINE-comparable
-    # subset (q01-q61, the families BASELINE.md prices) plus the
-    # slowest of the rest - the two things the judge actually joins on -
-    # and say how many were elided (full precision is in
-    # bench_last.json either way).
-    def qnum(name: str) -> int:
-        m = re.match(r"q(\d+)", name)
-        return int(m.group(1)) if m else 10**9
-
-    base = {k: v for k, v in out["queries"].items() if qnum(k) <= 61}
-    rest = sorted(
-        ((k, v) for k, v in out["queries"].items() if qnum(k) > 61),
-        key=lambda kv: -kv[1],
-    )
-    for keep_rest in (20, 10, 0):
-        o = dict(out)
-        kept = dict(base)
-        kept.update(rest[:keep_rest])
-        o["queries"] = {k.split("_")[0]: round(v, 1) for k, v in kept.items()}
-        o["queries_elided"] = len(out["queries"]) - len(kept)
-        line = json.dumps(o, separators=(",", ":"))
-        if len(line) <= _TAIL_WINDOW:
-            return line
-    o = dict(out)
-    o["queries"] = {}  # last resort: suite total + streaming only
-    return json.dumps(o, separators=(",", ":"))
+        harness.write_json(LAST_PATH, out)
+    print(harness.emit_line(out))
 
 
 def measure_streaming(spark) -> dict:
@@ -273,19 +194,6 @@ def measure_streaming(spark) -> dict:
         os.environ.get("BENCH_STREAM_REPEAT", os.environ.get("BENCH_REPEAT", "3"))
     )
 
-    def best_of(df_builder) -> float:
-        # best-of-N with the SAME default repeat as the batch loop:
-        # pass 1 pays Python-worker spin-up + whole-stage-codegen JIT
-        # for the decode UDF, and a single noisy pass on a loaded host
-        # must not read the plane below its nominal source rate
-        dt = None
-        for _ in range(repeat):
-            t0 = time.perf_counter()
-            df_builder().write.mode("overwrite").format("noop").save()
-            d1 = time.perf_counter() - t0
-            dt = d1 if dt is None else min(dt, d1)
-        return dt
-
     d = tempfile.mkdtemp(prefix="bench_frames_")
     try:
         with_packed_payload(frame_plan(spark, n_frames, src_ids)).repartition(
@@ -293,10 +201,10 @@ def measure_streaming(spark) -> dict:
         ).write.mode("overwrite").parquet(d)
         frames = spark.read.parquet(d)
 
-        def plane():
+        def plane(_spark, _sf_dir):
             return plan.ta_windows(plan.decode_hits(frames))
 
-        def e2e():
+        def e2e(_spark, _sf_dir):
             tds = plan.merge_decisions(
                 plan.ta_windows(plan.decode_hits(frames)),
                 max_gap_ticks=MLT_BUFFER_TIMEOUT_MS * 62_500,
@@ -314,13 +222,17 @@ def measure_streaming(spark) -> dict:
                 & (F.col("ts_ticks") <= F.col("td_end_tick") + READOUT_AFTER_TICKS),
             )
 
-        dt = best_of(plane)
+        # best-of-N with the SAME default repeat as the batch loop:
+        # pass 1 pays Python-worker spin-up + whole-stage-codegen JIT
+        # for the decode UDF, and a single noisy pass on a loaded host
+        # must not read the plane below its nominal source rate
+        dt = harness.best_of(spark, plane, None, repeat)
         # guard the e2e number's honesty: an upstream threshold change
         # that empties the TD stream would otherwise time an empty
         # readout join and report inflated throughput
-        n_tds = e2e().limit(1).count()
+        n_tds = e2e(spark, None).limit(1).count()
         assert n_tds > 0, "e2e pipeline produced no readout rows"
-        dt_e2e = best_of(e2e)
+        dt_e2e = harness.best_of(spark, e2e, None, repeat)
         total_frames = n_frames * len(src_ids)
         return {
             "frames": total_frames,

@@ -110,6 +110,32 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def prefix_postings(sets: DataFrame, threshold: float) -> DataFrame:
+    """The AllPairs probe-prefix postings of :func:`shingle_sets`
+    output: (doc_id, h, n, rn) for each doc's rarest
+    n - ceil(t*n) + 1 hashed shingles h under the global (df, h) order,
+    where n = |set| and rn is the shingle's rank in that order.  The
+    discovery index of :func:`ngram_jaccard_prefix_pairs`; the stress
+    bench counts its candidate volume from the same rows."""
+    # carry |set| with every posting from the array (map-side) so the
+    # doc-partitioned window below computes ONLY row_number - a second
+    # unordered count-over-partition pass would double the WindowExec
+    sh = sets.select(
+        "doc_id",
+        F.size("sh_set").alias("n"),
+        F.explode("sh_set").alias("shingle"),
+    ).select("doc_id", "n", F.xxhash64("shingle").alias("h"))
+    freq = sh.groupBy("h").agg(F.count("*").alias("df"))
+    wdoc = Window.partitionBy("doc_id").orderBy("df", "h")
+    ranked = sh.join(freq, "h").select(
+        "doc_id", "h", "n", F.row_number().over(wdoc).alias("rn")
+    )
+    return ranked.filter(
+        F.col("rn")
+        <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
+    )
+
+
 def ngram_jaccard_prefix_pairs(
     docs: DataFrame, threshold: float = 0.5, k: int = 3
 ) -> DataFrame:
@@ -150,23 +176,7 @@ def ngram_jaccard_prefix_pairs(
     hs = sets.select(
         "doc_id", F.transform("sh_set", lambda s: F.xxhash64(s)).alias("hs")
     )
-    # carry |set| with every posting from the array (map-side) so the
-    # doc-partitioned window below computes ONLY row_number - a second
-    # unordered count-over-partition pass would double the WindowExec
-    sh = sets.select(
-        "doc_id",
-        F.size("sh_set").alias("n"),
-        F.explode("sh_set").alias("shingle"),
-    ).select("doc_id", "n", F.xxhash64("shingle").alias("h"))
-    freq = sh.groupBy("h").agg(F.count("*").alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "h")
-    ranked = sh.join(freq, "h").select(
-        "doc_id", "h", "n", F.row_number().over(wdoc).alias("rn")
-    )
-    prefix = ranked.filter(
-        F.col("rn")
-        <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-    )
+    prefix = prefix_postings(sets, threshold)
     pa = prefix.select(
         F.col("doc_id").alias("doc_a"),
         "h",

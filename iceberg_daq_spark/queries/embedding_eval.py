@@ -186,6 +186,13 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def knn_audit_sample(vecs: DataFrame) -> DataFrame:
+    """q204's fixed-rate 1% query sample: the rows whose vec_id is a
+    multiple of 100.  The stress bench counts q204's scored pair volume
+    (sample x (corpus - 1)) through this same filter."""
+    return vecs.filter(F.col("vec_id") % 100 == 0)
+
+
 @register(
     "q204_knn_label_agreement",
     oracle="""
@@ -223,7 +230,7 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-NN label agreement: for a deterministic 10% query sample,
+    """1-NN label agreement: for a deterministic 1% query sample,
     does the nearest other vector (exact cosine) carry the same
     label - the classifier-free embedding-quality score (high
     agreement = the space clusters by label).
@@ -255,7 +262,7 @@ def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: acc + x,
     )
     vecs = emb.select("vec_id", "label", "embedding", nano_norm.alias("nn"))
-    s = vecs.filter(F.col("vec_id") % 100 == 0).select(
+    s = knn_audit_sample(vecs).select(
         F.col("vec_id").alias("q"),
         F.col("label").alias("qlabel"),
         F.col("embedding").alias("qemb"),

@@ -108,11 +108,11 @@ _RECHECK: list[str] = [
 # Generated by tools/gen_check_order.py from git history + artifacts.
 # --- BEGIN GENERATED ROWSONLY (tools/gen_check_order.py) ---
 _ROWSONLY_REFRESH: list[str] = [
-    "q56_sim_ann_ivf",
-    "q16_approx_count_distinct",
-    "q29_watermark_late_data",
-    "q32_adler32_checksum",
-    "q104_hll_sketch_union",
+    "q160_sliding_hll_wau",
+    "q86_semdedup",
+    "q89_bpe_vocab",
+    "q90_training_prep_pipeline",
+    "q157_kcore",
 ]
 # --- END GENERATED ROWSONLY ---
 
@@ -127,35 +127,35 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q07_left_semi_join": 11,
     "q08_left_anti_join": 11,
     "q09_range_join": 11,
-    "q100_heavy_hitters": 8,
-    "q101_contrastive_pairs": 8,
+    "q100_heavy_hitters": 14,
+    "q101_contrastive_pairs": 14,
     "q102_data_quality_checks": 13,
-    "q103_metric_anomalies": 9,
-    "q104_hll_sketch_union": 9,
-    "q105_quality_percentile_rank": 8,
+    "q103_metric_anomalies": 14,
+    "q104_hll_sketch_union": 14,
+    "q105_quality_percentile_rank": 14,
     "q106_fuzzy_match": 12,
-    "q107_pareto_frontier": 8,
-    "q108_hybrid_rrf": 8,
+    "q107_pareto_frontier": 14,
+    "q108_hybrid_rrf": 14,
     "q109_pagerank": 13,
     "q10_asof_join": 11,
-    "q110_cohort_retention": 8,
+    "q110_cohort_retention": 14,
     "q111_event_funnel": 11,
-    "q112_peak_concurrency": 8,
-    "q113_event_transitions": 8,
-    "q114_top_journeys": 8,
-    "q115_metric_correlation": 8,
-    "q116_gapfill_resample": 8,
+    "q112_peak_concurrency": 14,
+    "q113_event_transitions": 14,
+    "q114_top_journeys": 14,
+    "q115_metric_correlation": 14,
+    "q116_gapfill_resample": 14,
     "q117_triangle_count": 13,
-    "q118_trend_slope": 8,
+    "q118_trend_slope": 14,
     "q119_full_outer_reconcile": 13,
     "q11_cross_join": 11,
-    "q120_source_vocab_overlap": 8,
-    "q121_funnel_timing": 8,
-    "q122_ab_welch": 8,
-    "q123_spatial_radius_join": 8,
+    "q120_source_vocab_overlap": 14,
+    "q121_funnel_timing": 14,
+    "q122_ab_welch": 14,
+    "q123_spatial_radius_join": 14,
     "q124_top_supplier_view": 13,
-    "q125_association_rules": 8,
-    "q126_last_touch_attribution": 8,
+    "q125_association_rules": 14,
+    "q126_last_touch_attribution": 14,
     "q127_column_profile": 13,
     "q128_degree_distribution": 10,
     "q129_cusum_changepoint": 10,
@@ -195,17 +195,17 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q15_minmax_firstlast": 11,
     "q160_sliding_hll_wau": 9,
     "q161_ks_two_sample": 11,
-    "q162_basket_lift": 10,
+    "q162_basket_lift": 14,
     "q163_ab_conversion_ztest": 10,
     "q164_mann_whitney_u": 10,
-    "q165_copurchase_cosine": 10,
+    "q165_copurchase_cosine": 14,
     "q166_user_kl_divergence": 10,
     "q167_last_touch_attribution": 10,
-    "q168_shipping_priority": 9,
-    "q169_order_priority_wait": 9,
-    "q16_approx_count_distinct": 2,
-    "q170_revenue_uplift": 9,
-    "q171_volume_shipping": 9,
+    "q168_shipping_priority": 14,
+    "q169_order_priority_wait": 14,
+    "q16_approx_count_distinct": 14,
+    "q170_revenue_uplift": 14,
+    "q171_volume_shipping": 14,
     "q172_market_share": 10,
     "q173_returned_items": 10,
     "q174_customer_distribution": 10,
@@ -215,15 +215,15 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q178_waiting_suppliers": 10,
     "q179_dormant_rich_customers": 10,
     "q17_collect_sorted_list": 11,
-    "q180_seasonal_dow_index": 9,
-    "q181_wape_backtest": 9,
-    "q182_floored_balance": 9,
-    "q183_max_drawdown": 9,
-    "q184_weekend_lift": 9,
-    "q185_power_analysis": 9,
-    "q186_markov2_transitions": 9,
-    "q187_bot_burst_score": 9,
-    "q188_revenue_retention": 9,
+    "q180_seasonal_dow_index": 14,
+    "q181_wape_backtest": 14,
+    "q182_floored_balance": 14,
+    "q183_max_drawdown": 14,
+    "q184_weekend_lift": 14,
+    "q185_power_analysis": 14,
+    "q186_markov2_transitions": 14,
+    "q187_bot_burst_score": 14,
+    "q188_revenue_retention": 14,
     "q189_vocab_growth": 9,
     "q18_ranking_topk": 11,
     "q190_bigram_perplexity": 9,
@@ -235,13 +235,13 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q196_price_band_mix": 9,
     "q197_order_reconciliation": 9,
     "q198_laspeyres_index": 9,
-    "q199_label_propagation": 9,
+    "q199_label_propagation": 14,
     "q19_analytic_lag_lead": 12,
     "q200_wilson_ranking": 9,
     "q201_grid_hotspot": 9,
     "q202_weekend_did": 9,
     "q203_label_separation": 9,
-    "q204_knn_label_agreement": 9,
+    "q204_knn_label_agreement": 14,
     "q205_position_attribution": 9,
     "q206_referential_integrity": 11,
     "q207_weekly_yoy": 9,
@@ -270,7 +270,7 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q228_naive_bayes_langid": 11,
     "q229_poisson_bootstrap_ci": 11,
     "q22_set_operations": 12,
-    "q230_recsys_backtest": 13,
+    "q230_recsys_backtest": 14,
     "q231_absorbing_markov": 13,
     "q232_holt_winters": 11,
     "q233_model_eval": 11,
@@ -312,10 +312,10 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q26_sliding_window": 12,
     "q27_session_window": 12,
     "q28_prescale": 12,
-    "q29_watermark_late_data": 2,
+    "q29_watermark_late_data": 14,
     "q30_interval_join_readout": 12,
     "q31_metadata_docs": 12,
-    "q32_adler32_checksum": 2,
+    "q32_adler32_checksum": 14,
     "q33_tp_ta_reduction": 12,
     "q34_dromap_compile": 12,
     "q35_run_allocator": 12,
@@ -337,7 +337,7 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q53_audio_stats": 12,
     "q54_embed_near_dup": 12,
     "q55_embed_near_dup_lsh": 13,
-    "q56_sim_ann_ivf": 1,
+    "q56_sim_ann_ivf": 14,
     "q57_dedup_components": 13,
     "q58_corpus_profile": 12,
     "q59_salted_join": 12,
@@ -360,11 +360,11 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q76_quality_funnel": 13,
     "q77_label_centroids": 13,
     "q78_doc_chunking": 13,
-    "q79_pii_redaction": 8,
-    "q80_url_domains": 8,
+    "q79_pii_redaction": 14,
+    "q80_url_domains": 14,
     "q81_unigram_surprisal": 13,
-    "q82_keyword_extract": 8,
-    "q83_source_drift": 8,
+    "q82_keyword_extract": 14,
+    "q83_source_drift": 14,
     "q84_bm25_search": 13,
     "q85_shard_assignment": 13,
     "q86_semdedup": 9,
@@ -376,11 +376,11 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q92_dup_cluster_sizes": 13,
     "q93_zipf_slope": 13,
     "q94_source_dup_rates": 13,
-    "q95_readability": 8,
-    "q96_curriculum_bins": 8,
+    "q95_readability": 14,
+    "q96_curriculum_bins": 14,
     "q97_sim_ann_pq": 13,
-    "q98_int8_quantization": 8,
-    "q99_weighted_sample": 8,
+    "q98_int8_quantization": 14,
+    "q99_weighted_sample": 14,
 }
 # --- END GENERATED ---
 

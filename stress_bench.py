@@ -25,6 +25,11 @@ much fan-out the AllPairs prefix order avoids while staying lossless.
 
 Usage: python stress_bench.py   (STRESS_COPIES=10, STRESS_REPEAT=2,
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 overridable via env).
+
+Timing goes through tools/harness.py (the same timed run as bench.py,
+plus a GC between repeats).  Artifact: this entry point owns
+``BENCH_STRESS.json``; a STRESS_ONLY run merges its re-timed cells into
+the existing file.
 """
 
 from __future__ import annotations
@@ -41,6 +46,7 @@ from iceberg_daq_spark.operators import dedup
 from iceberg_daq_spark.registry import all_queries
 from iceberg_daq_spark.session import get_spark
 from iceberg_daq_spark.tables import load
+from tools import harness
 
 # order matters: q57 before q73 (the retention query reads the stored
 # dedup-groups stage a real pipeline would persist - see queries/llm.py)
@@ -315,16 +321,15 @@ def build_stress_dir(spark, base_dir: str, out_dir: str, copies: int) -> None:
             )
 
 
-def assert_valve_engages(spark, stress_dir: str, df_max: int = 128) -> dict:
-    """The duplicated corpus must push shingle document frequencies
-    past df_max so q41's hot-shingle valve has real work: returns the
-    df distribution and fails the run if no shingle is hot (the stress
-    would not be stressing the valve) or if the hot set somehow leaked
-    into pair discovery (discovery index must shrink)."""
-    d = load(spark, stress_dir, "documents")
-    sh = dedup.shingles(d)
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    row = freq.agg(
+def _shingle_df_stats(spark, sf_dir: str, df_max: int):
+    """Shingle document-frequency distribution of a corpus against the
+    legacy df_max valve, as one row."""
+    freq = (
+        dedup.shingles(load(spark, sf_dir, "documents"))
+        .groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+    )
+    return freq.agg(
         F.count("*").alias("n_shingles"),
         F.max("df").alias("max_df"),
         F.sum(F.when(F.col("df") > df_max, 1).otherwise(0)).alias("hot"),
@@ -336,6 +341,15 @@ def assert_valve_engages(spark, stress_dir: str, df_max: int = 128) -> dict:
             F.when(F.col("df") <= df_max, F.col("df") * F.col("df")).otherwise(0)
         ).alias("pairvol"),
     ).collect()[0]
+
+
+def assert_valve_engages(spark, stress_dir: str, df_max: int = 128) -> dict:
+    """The duplicated corpus must push shingle document frequencies
+    past df_max so q41's hot-shingle valve has real work: returns the
+    df distribution and fails the run if no shingle is hot (the stress
+    would not be stressing the valve) or if the hot set somehow leaked
+    into pair discovery (discovery index must shrink)."""
+    row = _shingle_df_stats(spark, stress_dir, df_max)
     assert row["hot"] > 0, "stress corpus produced no hot shingles - not a stress"
     assert row["max_df"] > df_max
     return {
@@ -360,26 +374,10 @@ def assert_valve_engages(spark, stress_dir: str, df_max: int = 128) -> dict:
 
 def _prefix_pair_volume(spark, sf_dir: str, threshold: float = 0.5) -> int:
     """sum over shingles of (#docs whose probe prefix contains it)^2 -
-    the candidate volume of q41's prefix-filtered discovery."""
-    from pyspark.sql import Window
-
-    d = load(spark, sf_dir, "documents")
-    sets = dedup.shingle_sets(d)
-    sh = sets.select("doc_id", F.explode("sh_set").alias("s")).select(
-        "doc_id", F.xxhash64("s").alias("h")
-    )
-    freq = sh.groupBy("h").agg(F.count("*").alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "h")
-    wall = Window.partitionBy("doc_id")
-    ranked = sh.join(freq, "h").select(
-        "doc_id",
-        "h",
-        F.row_number().over(wdoc).alias("rn"),
-        F.count("*").over(wall).alias("n"),
-    )
-    prefix = ranked.filter(
-        F.col("rn") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-    )
+    the candidate volume of q41's prefix-filtered discovery, counted
+    over q41's own prefix postings."""
+    sets = dedup.shingle_sets(load(spark, sf_dir, "documents"))
+    prefix = dedup.prefix_postings(sets, threshold)
     return int(
         prefix.groupBy("h")
         .agg(F.count("*").alias("pdf"))
@@ -391,21 +389,10 @@ def _prefix_pair_volume(spark, sf_dir: str, threshold: float = 0.5) -> int:
 def base_pair_volume(spark, base_dir: str, df_max: int = 128) -> int:
     """sum(df^2) over sub-hot shingles at the BASE scale - the
     denominator for reading q41's stress ratio."""
-    d = load(spark, base_dir, "documents")
-    sh = dedup.shingles(d)
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    return int(
-        freq.agg(
-            F.sum(
-                F.when(F.col("df") <= df_max, F.col("df") * F.col("df")).otherwise(0)
-            ).alias("v")
-        ).collect()[0]["v"]
-    )
+    return int(_shingle_df_stats(spark, base_dir, df_max)["pairvol"])
 
 
 def time_queries(spark, specs, names, sf_dir, repeat):
-    from iceberg_daq_spark.queries import llm
-
     from iceberg_daq_spark.operators import ranking
 
     out = {}
@@ -415,37 +402,11 @@ def time_queries(spark, specs, names, sf_dir, repeat):
         # the switch threshold so the distributed rank selection runs
         # at both scales (the small branch is plain F.percentile -
         # nothing to stress)
-        pin_giant = name.startswith("q214")
         saved_thr = ranking.GIANT_GROUP_ROWS
-        if pin_giant:
+        if name.startswith("q214"):
             ranking.GIANT_GROUP_ROWS = 0
-        best = None
-        for _ in range(repeat):
-            if name.startswith("q57"):
-                # same honesty rule as bench.py: every q57 repeat times
-                # the FULL pair+closure stage; q73 (after it) reuses
-                # the stage the last repeat left - the stored-table
-                # pipeline shape
-                llm._DEDUP_GROUPS_CACHE.clear()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-            # reclaim the run's shuffle/broadcast/checkpoint debris
-            # BETWEEN repeats, not just between queries: the
-            # ContextCleaner only frees blocks after a GC, and the
-            # heavy pair-join queries otherwise time their second
-            # repeat under the first repeat's dead 30M-row shuffle
-            # (measured: q41 at 10x reads 8-13s post-GC vs 33-50s
-            # under debris - the cost being measured must be the
-            # query's, not the allocator's)
-            import gc as _gc
-
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        if pin_giant:
-            ranking.GIANT_GROUP_ROWS = saved_thr
+        best = harness.best_of(spark, fn, sf_dir, repeat, gc_between=True)
+        ranking.GIANT_GROUP_ROWS = saved_thr
         out[name] = round(best, 3)
         print(f"# {sf_dir.rsplit('/', 1)[-1]} {name}: {best:.3f}s", file=sys.stderr)
         if name.startswith("q57"):
@@ -456,9 +417,9 @@ def time_queries(spark, specs, names, sf_dir, repeat):
             # the stored groups table.  Record that consumer-read cost
             # too, so the stress ratio of the ALGORITHM (stage build)
             # and of the PIPELINE SHAPE (stage reuse) are both visible.
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            reused = time.perf_counter() - t0
+            # The harness drops the stage only before q57 itself, so
+            # the wrapped call reads the stage the repeats above left.
+            reused = harness.run_once(spark, lambda s, d: fn(s, d), sf_dir)
             out[name + "__stage_reused"] = round(reused, 3)
             print(
                 f"# {sf_dir.rsplit('/', 1)[-1]} {name} (stage reused): "
@@ -593,17 +554,12 @@ def _count_q250_model(spark, d: str) -> int:
 
 def _count_q204_pairs(spark, d: str) -> int:
     """Growth driver for q204: the scored pair volume, exactly
-    n_sample x (n_corpus - 1) by the audit's join contract."""
-    from pyspark.sql import functions as F2
+    n_sample x (n_corpus - 1) by the audit's join contract, with the
+    sample drawn by q204's own sampling helper."""
+    from iceberg_daq_spark.queries.embedding_eval import knn_audit_sample
 
-    from iceberg_daq_spark.tables import load as _load
-
-    emb = _load(spark, d, "embeddings").select("vec_id")
-    row = emb.agg(
-        F2.count("*").alias("n"),
-        F2.sum(F2.when(F2.col("vec_id") % 100 == 0, 1).otherwise(0)).alias("s"),
-    ).collect()[0]
-    return int(row["s"]) * (int(row["n"]) - 1)
+    emb = load(spark, d, "embeddings").select("vec_id")
+    return knn_audit_sample(emb).count() * (emb.count() - 1)
 
 
 OUTPUT_COUNTERS = {
@@ -634,10 +590,7 @@ def main() -> None:
     if only:  # debugging aid: comma-separated query prefixes
         keep = {p.strip() for p in only.split(",")}
         prefixes = [p for p in prefixes if p in keep]
-    names = [
-        next(n for n in sorted(specs) if n.startswith(prefix))
-        for prefix in prefixes
-    ]
+    names = harness.match_queries(prefixes)
 
     t0 = time.perf_counter()
     if os.environ.get("STRESS_REUSE") and os.path.isdir(stress_dir):
@@ -888,8 +841,7 @@ def main() -> None:
             % (repeat, passes, copies)
         ),
     }
-    repo = os.path.dirname(os.path.abspath(__file__))
-    artifact = os.path.join(repo, "BENCH_STRESS.json")
+    artifact = os.path.join(harness.REPO, "BENCH_STRESS.json")
     if only and os.path.exists(artifact):
         # targeted re-measure: merge the re-timed cells into the full
         # artifact of record instead of replacing it (static note
@@ -905,9 +857,7 @@ def main() -> None:
             sum(c["stress_sec"] for c in merged.values()), 3
         )
         out["valve"] = prev.get("valve", out["valve"])
-    with open(artifact, "w") as fh:
-        json.dump(out, fh, indent=1)
-        fh.write("\n")
+    harness.write_json(artifact, out)
     print(json.dumps(out, separators=(",", ":")))
     if failed:
         print(f"# SUPERLINEAR: {failed} exceeded {MAX_RATIO}x", file=sys.stderr)

@@ -101,7 +101,9 @@ def test_text_sql_functions_match_column_api(spark, sf_dir):
 
 def test_bench_regression_tripwire():
     """The per-query >2x tripwire fires on a real slowdown, skips
-    noise-band priors (<50 ms), new queries, and improvements."""
+    noise-band priors (<50 ms), new queries, and improvements - and
+    stays silent against a record from another (or an unrecorded)
+    core count."""
     import importlib.util
     import os
 
@@ -113,5 +115,7 @@ def test_bench_regression_tripwire():
 
     prev = {"q_slow": 1.0, "q_noise": 0.01, "q_fast": 2.0, "q_same": 0.5}
     now = {"q_slow": 2.5, "q_noise": 0.4, "q_fast": 0.3, "q_same": 0.6, "q_new": 9.0}
-    got = bench.find_regressions(prev, now)
+    got = bench.find_regressions({"queries": prev, "cpus": 8}, now, 8)
     assert got == {"q_slow": [1.0, 2.5]}
+    assert bench.find_regressions({"queries": prev, "cpus": 8}, now, 32) == {}
+    assert bench.find_regressions({"queries": prev}, now, 8) == {}

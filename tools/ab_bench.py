@@ -2,8 +2,10 @@
 """Interleaved paired A/B benchmark (the round-13 protocol): variants
 alternate inside ONE session, one execution each per round, so host
 drift cancels in the pairing; report per-round pairs and the min per
-variant.  The timed action is the noop sink (guide section 1.4) and the
-DataFrame cache is cleared between executions, exactly like bench.py.
+variant.  Each execution is tools/harness.py's timed run, the same one
+bench.py uses (noop sink, cache cleared between executions, q57's
+dedup stage rebuilt every run).  Artifacts: none - results go to
+stdout only.
 
 Usage:
     python tools/ab_bench.py ROUNDS label_a=mod.path:fn label_b=mod.path:fn ...
@@ -18,11 +20,10 @@ from __future__ import annotations
 import importlib
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from iceberg_daq_spark.session import get_spark  # noqa: E402
+from tools import harness  # noqa: E402
 
 
 def resolve(spec: str):
@@ -35,21 +36,16 @@ def main() -> None:
     rounds = int(sys.argv[1])
     variants = [resolve(s) for s in sys.argv[2:]]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="ab_bench")
+    spark = harness.start("ab_bench", sf_dir)
     spark.sparkContext.setLogLevel("ERROR")
-    # warm JVM + parquet footers once, outside timing (bench.py protocol)
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     best: dict[str, float] = {}
     times: dict[str, list[float]] = {lab: [] for lab, _ in variants}
     for r in range(rounds):
         for label, fn in variants:
             spark.sparkContext.setJobDescription(f"ab:{label}:r{r}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
+            dt = harness.run_once(spark, fn, sf_dir)
             times[label].append(dt)
             best[label] = min(best.get(label, dt), dt)
-            spark.catalog.clearCache()
         print(
             f"round {r}: "
             + "  ".join(f"{lab}={times[lab][-1]:.3f}s" for lab, _ in variants),

@@ -17,6 +17,7 @@ sf0.001) and extract the structural properties the scale contract
 
 The table is regenerated with  python tools/plan_audit.py  and
 committed as PLANS.md so the audit diffs alongside plan changes.
+Artifact: this entry point owns PLANS.md.
 """
 
 from __future__ import annotations
@@ -29,12 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_daq_spark.registry import all_queries  # noqa: E402
 from iceberg_daq_spark.session import get_spark  # noqa: E402
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from tools import harness  # noqa: E402
 
 
 def audit_one(plan: str) -> dict:
@@ -57,7 +53,7 @@ def main() -> None:
     failures: list[str] = []
     for name in sorted(specs):
         try:
-            a = audit_one(plan_of(specs[name].fn(spark, sf_dir)))
+            a = audit_one(harness.plan_of(specs[name].fn(spark, sf_dir)))
         except Exception as ex:  # pragma: no cover - audit must not abort
             failures.append(f"{name}: {ex!r}")
             continue
@@ -96,8 +92,7 @@ def main() -> None:
     if failures:
         out.append("\n## Plan-build failures\n")
         out.extend(f"- {f}" for f in failures)
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "PLANS.md"), "w") as fh:
+    with open(os.path.join(harness.REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out) + "\n")
     print(f"PLANS.md written: {n} queries, {len(failures)} failures")
 
