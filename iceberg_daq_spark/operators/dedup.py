@@ -110,13 +110,11 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def prefix_postings(sets: DataFrame, threshold: float) -> DataFrame:
-    """The AllPairs probe-prefix postings of :func:`shingle_sets`
-    output: (doc_id, h, n, rn) for each doc's rarest
-    n - ceil(t*n) + 1 hashed shingles h under the global (df, h) order,
-    where n = |set| and rn is the shingle's rank in that order.  The
-    discovery index of :func:`ngram_jaccard_prefix_pairs`; the stress
-    bench counts its candidate volume from the same rows."""
+def ranked_postings(sets: DataFrame) -> DataFrame:
+    """Every hashed shingle of :func:`shingle_sets` output as
+    (doc_id, h, n, rn): n = |set| and rn is the shingle's rank within
+    its doc under the global (df, h) order, rarest first - the order
+    every prefix filter here cuts."""
     # carry |set| with every posting from the array (map-side) so the
     # doc-partitioned window below computes ONLY row_number - a second
     # unordered count-over-partition pass would double the WindowExec
@@ -127,10 +125,19 @@ def prefix_postings(sets: DataFrame, threshold: float) -> DataFrame:
     ).select("doc_id", "n", F.xxhash64("shingle").alias("h"))
     freq = sh.groupBy("h").agg(F.count("*").alias("df"))
     wdoc = Window.partitionBy("doc_id").orderBy("df", "h")
-    ranked = sh.join(freq, "h").select(
+    return sh.join(freq, "h").select(
         "doc_id", "h", "n", F.row_number().over(wdoc).alias("rn")
     )
-    return ranked.filter(
+
+
+def prefix_postings(sets: DataFrame, threshold: float) -> DataFrame:
+    """The AllPairs probe-prefix postings of :func:`shingle_sets`
+    output: (doc_id, h, n, rn) for each doc's rarest
+    n - ceil(t*n) + 1 hashed shingles h under the global (df, h) order,
+    where n = |set| and rn is the shingle's rank in that order.  The
+    discovery index of :func:`ngram_jaccard_prefix_pairs`; the stress
+    bench counts its candidate volume from the same rows."""
+    return ranked_postings(sets).filter(
         F.col("rn")
         <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
     )
@@ -287,16 +294,7 @@ def containment_pairs(
     hs = sets.select(
         "doc_id", F.transform("sh_set", lambda s: F.xxhash64(s)).alias("hs")
     )
-    sh = sets.select(
-        "doc_id",
-        F.size("sh_set").alias("n"),
-        F.explode("sh_set").alias("shingle"),
-    ).select("doc_id", "n", F.xxhash64("shingle").alias("h"))
-    freq = sh.groupBy("h").agg(F.count("*").alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "h")
-    ranked = sh.join(freq, "h").select(
-        "doc_id", "h", "n", F.row_number().over(wdoc).alias("rn")
-    )
+    ranked = ranked_postings(sets)
     prefix_a = ranked.filter(
         F.col("rn")
         <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1 + prefix_ext

@@ -21,6 +21,14 @@ from pyspark.sql import functions as F
 from iceberg_daq_spark.registry import register
 from iceberg_daq_spark.tables import load
 
+# q199's driver-side label propagation collects the whole brand edge
+# list.  Brand cardinality bounds it (TPC-H's 25 brands give at most
+# 25 x 24 = 600 edges); the cap is sized for the driver loop instead
+# (both LPA rounds over 100k dict edges: 0.23 s on a 4-core x86 host),
+# so a corpus that outgrows it fails loudly instead of pulling an
+# unbounded list onto the driver (the CC_DRIVER_EDGE_MAX discipline).
+Q199_DRIVER_EDGE_MAX = 100_000
+
 
 def brand_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q199's weighted brand co-purchase edge list: one partial-
@@ -106,7 +114,17 @@ def q199(spark: SparkSession, sf_dir: str) -> DataFrame:
     paid a distinct pin + okey self-join + per-round join/window
     shuffles (~7 exchanges, 12 window nodes of pure scheduler floor on
     metadata-sized state); the final community fold stays in Spark."""
-    edges = brand_copurchase_edges(spark, sf_dir).collect()
+    edges = (
+        brand_copurchase_edges(spark, sf_dir)
+        .limit(Q199_DRIVER_EDGE_MAX + 1)
+        .collect()
+    )
+    if len(edges) > Q199_DRIVER_EDGE_MAX:
+        raise ValueError(
+            f"q199: collected {len(edges)} brand edges (the collect stops "
+            f"at cap + 1), over Q199_DRIVER_EDGE_MAX={Q199_DRIVER_EDGE_MAX}; "
+            "the driver-side LPA needs a brand-cardinality-bounded graph"
+        )
     labels = {r["src"]: r["src"] for r in edges}
     for _ in range(2):
         votes: dict[str, dict[str, int]] = {}

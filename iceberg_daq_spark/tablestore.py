@@ -62,18 +62,29 @@ cluster:
                                      manifest references (covers dirs
                                      left by a crash mid-commit)
 
-A *manifest* ``v{n}.json`` records ``{version, data_dirs, schema}``
-where ``data_dirs`` is the ordered list of data directories making up
-the snapshot (one for a rewrite commit; several after
-:meth:`MergeTable.append` fast-append commits, Iceberg's append
-snapshot that writes only the new rows) and schema is a list of
-``{name, type, physical, default}`` fields:
+A *manifest* ``v{n}.json`` is the whole snapshot: ``data_dirs``, the
+ordered list of data directories making up the snapshot (one for a
+rewrite commit; several after :meth:`MergeTable.append` fast-append
+commits, Iceberg's append snapshot that writes only the new rows),
+``schema``, the table properties (``partition_spec``, ``dir_specs``,
+``key_cols``, ``sort_order``, ``bloom_cols``), per-file
+``file_stats``, pending ``deletes`` and the snapshot summary
+(``version``, ``parent``, ``operation``, ``committed_at``).  The
+schema is a list of ``{name, type, physical, default}`` fields:
 ``physical`` is the column's name inside the parquet files (a renamed
 column keeps its old physical name, exactly like Iceberg's field-id
 mapping) or ``null`` for a column added after the data was written
 (read as its default, like Iceberg's identity-partition-free add).
 Data commits write a fresh ``d{n}`` directory; metadata-only commits
-write no data at all.
+write no data at all.  Each manifest is its parent manifest plus the
+fields its commit changes.
+
+Every data commit runs one optimistic protocol: pin the current
+manifest, stage the new data dir with no lock held, then take the
+commit lock only to validate, rename the stage to ``d{n}``, write the
+manifest and flip the pointer.  Rewrites validate that nothing
+committed since the pin and rebase on conflict; fast appends validate
+only that the schema is unchanged.
 
 Readers always see a complete snapshot: the pointer flips only after
 the manifest and data are fully written, and ``os.replace`` is atomic
@@ -106,8 +117,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _POINTER = "_CURRENT"
-_DATA_DIR_RE = re.compile(r"^[dv]\d{6}$")
+_DATA_DIR_RE = re.compile(r"^d\d{6}$")
 _STAGED_RE = re.compile(r"^_staged_[0-9a-f]{12}$")
+# optimistic-commit attempts before a data commit raises CommitConflict
+_COMMIT_RETRIES = 6
+# the manifest fields a commit carries forward from its parent unless
+# it changes them, in their on-disk order
+_CARRIED = (
+    "data_dirs",
+    "schema",
+    "partition_spec",
+    "dir_specs",
+    "key_cols",
+    "file_stats",
+    "deletes",
+    "sort_order",
+    "bloom_cols",
+)
+# the table properties a table's first commit takes from the constructor
+_SEEDED = ("key_cols", "partition_spec", "sort_order")
 
 
 class CommitConflict(RuntimeError):
@@ -116,9 +144,46 @@ class CommitConflict(RuntimeError):
     analog)."""
 
 
+def _same_head(m: dict | None, head: dict | None) -> bool:
+    """A rewrite's commit check: nothing committed since it pinned
+    base manifest ``m``."""
+    return (m and m["version"]) == (head and head["version"])
+
+
 def _data_dirs(manifest: dict) -> list[str]:
-    """The snapshot's data dirs (accepts the older single-dir form)."""
-    return manifest.get("data_dirs") or [manifest["data_dir"]]
+    """The snapshot's data dirs."""
+    return manifest["data_dirs"]
+
+
+def _append_only(m_from: dict | None, m_to: dict | None) -> bool:
+    """Is the interval between two retained snapshots append-only:
+    ``m_to``'s data dirs extend ``m_from``'s, with the same column names
+    and the same pending deletes?  (A merge-on-read delete in the
+    interval can remove rows from the NEW dirs too - its applies_to
+    covers them - so dir lineage alone would not prove the delta.)"""
+    if m_from is None or m_to is None:
+        return False
+    d_from = _data_dirs(m_from)
+    return (
+        _data_dirs(m_to)[: len(d_from)] == d_from
+        and [f["name"] for f in m_from["schema"]]
+        == [f["name"] for f in m_to["schema"]]
+        and _delete_entries(m_from) == _delete_entries(m_to)
+    )
+
+
+def _rows_not_in(df: DataFrame, other: DataFrame) -> DataFrame:
+    """The rows of ``df`` with no equal row in ``other`` over their
+    shared columns.  Equality is NULL-safe per column: a bare
+    column-list equi-join never matches a row containing NULL (e.g.
+    the default-NULL values merge(evolve_schema=True)/add_column
+    produce), which would re-report identical rows as changes on every
+    incremental read."""
+    other_s = other.select(*[c for c in df.columns if c in other.columns])
+    cond = reduce(
+        lambda x, y: x & y, [df[c].eqNullSafe(other_s[c]) for c in other_s.columns]
+    )
+    return df.join(other_s, cond, "left_anti")
 
 
 def _delete_entries(manifest: dict | None) -> list[dict]:
@@ -763,10 +828,6 @@ class MergeTable:
         vs.extend(self._ref_heads().values())
         return max(vs) + 1
 
-    def _version_dir(self, v: int) -> str:
-        """Legacy (pre-manifest) layout: data directly in v{n}."""
-        return os.path.join(self.path, f"v{v:06d}")
-
     def _manifest_path(self, v: int) -> str:
         return os.path.join(self.path, f"v{v:06d}.json")
 
@@ -776,6 +837,50 @@ class MergeTable:
                 return json.load(f)
         except FileNotFoundError:
             return None
+
+    def _head(self) -> dict | None:
+        """The current snapshot's manifest; None before the first
+        commit.  The pointer never names a manifest that was not fully
+        written, so a missing one is a corrupt table - unless a
+        concurrent commit moved the pointer and expired it meanwhile,
+        which re-reads the new head."""
+        while True:
+            cur = self.current_version()
+            if cur is None:
+                return None
+            m = self._load_manifest(cur)
+            if m is not None:
+                return m
+            if self.current_version() == cur:
+                raise ValueError(
+                    f"table {self.path} is corrupt: its head v{cur} has no manifest"
+                )
+
+    def _retained(self, v: int, cur: int) -> dict:
+        """Version ``v``'s manifest, raising when snapshot expiry has
+        reclaimed it or any of its data or delete dirs."""
+        m = self._load_manifest(v)
+        if m is None or not all(
+            os.path.isdir(os.path.join(self.path, d))
+            for d in _data_dirs(m) + [e["dir"] for e in _delete_entries(m)]
+        ):
+            raise ValueError(
+                f"version {v} not retained (current {cur}, keep_versions "
+                f"{self.keep_versions})"
+            )
+        return m
+
+    def _prop(self, name: str, m: dict | None):
+        """Manifest field ``name`` of snapshot ``m``: the value every
+        commit carries forward unless it changes it.  Before the first
+        commit (``m`` None) the seeded table properties come from the
+        constructor and the rest are empty; ``key_cols`` also falls
+        back to the constructor when the manifest recorded none."""
+        if m is None:
+            return list(getattr(self, name)) if name in _SEEDED else []
+        if name == "key_cols":
+            return list(m[name] or self.key_cols)
+        return m[name]
 
     # -- named refs (Iceberg tags) --------------------------------------
     def _refs_path(self) -> str:
@@ -801,14 +906,7 @@ class MergeTable:
             if cur is None:
                 raise ValueError(f"create_tag() on uncommitted table {self.path}")
             v = cur if version is None else version
-            m = self._load_manifest(v)
-            if m is None or not all(
-                os.path.isdir(os.path.join(self.path, d)) for d in _data_dirs(m)
-            ):
-                raise ValueError(
-                    f"version {v} not retained (current {cur}, keep_versions "
-                    f"{self.keep_versions})"
-                )
+            self._retained(v, cur)
             refs = self.tags()
             if name in refs:
                 raise ValueError(f"tag {name!r} already exists (at v{refs[name]})")
@@ -854,9 +952,7 @@ class MergeTable:
             v = version if version is not None else self.current_version()
             if v is None:
                 raise ValueError(f"create_branch on uncommitted table {self.path}")
-            if self._load_manifest(v) is None and not os.path.isdir(
-                self._version_dir(v)
-            ):
+            if self._load_manifest(v) is None:
                 raise ValueError(f"version {v} not retained")
             _atomic_write(os.path.join(self.path, f"_BRANCH_{name}"), str(v))
             return v
@@ -979,26 +1075,9 @@ class MergeTable:
         if as_of is not None:
             version = self.version_as_of(as_of)
         v = cur if version is None else version
-        m = self._load_manifest(v)
-        if m is None:
-            # legacy layout (tables written before manifests existed)
-            if not os.path.isdir(self._version_dir(v)):
-                raise ValueError(
-                    f"version {v} not retained (current {cur}, keep_versions "
-                    f"{self.keep_versions})"
-                )
-            df = spark.read.parquet(self._version_dir(v))
-            return df.filter(F.expr(where)) if where else df
+        m = self._retained(v, cur)
         names = _data_dirs(m)
         dels = _delete_entries(m)
-        dirs = [os.path.join(self.path, d) for d in names] + [
-            os.path.join(self.path, e["dir"]) for e in dels
-        ]
-        if not all(os.path.isdir(d) for d in dirs):
-            raise ValueError(
-                f"version {v} not retained (current {cur}, keep_versions "
-                f"{self.keep_versions})"
-            )
         conjs = _parse_conjuncts(where) if where else []
         phys_of = {f["name"]: f["physical"] for f in m["schema"]}
         # manifest min/max file skipping: per dir, either None (scan
@@ -1205,47 +1284,22 @@ class MergeTable:
         )
 
     # -- commit machinery ---------------------------------------------
-    def _commit(self, df: DataFrame) -> int:
-        """Write df as the next version and atomically flip the
-        pointer (write-tmp-then-rename, the reference's A8 protocol)."""
-        with _commit_lock(self.path):
-            return self._commit_locked(df)
-
     def _effective_keys(self) -> tuple[str, ...]:
         """The MERGE keys in force: the manifest's persisted
         ``key_cols`` (survives rename_column across instances) or, for
-        a new / legacy-manifest table, the constructor seed."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        if m is not None and m.get("key_cols"):
-            return tuple(m["key_cols"])
-        return tuple(self.key_cols)
+        a new table, the constructor seed."""
+        return tuple(self._prop("key_cols", self._head()))
 
     def _current_spec(self) -> list[str]:
         """The active partition spec: the manifest's (the table's
         persistent property) or, for a not-yet-committed table, the
         constructor seed."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        if m is not None:
-            return list(m.get("partition_spec") or [])
-        return list(self.partition_spec)
-
-    def _current_sort(self) -> list[str]:
-        """The active sort order (Iceberg SortOrder analog): the
-        manifest's, or the constructor seed for a new table."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        if m is not None:
-            return list(m.get("sort_order") or [])
-        return list(self.sort_order)
+        return list(self._prop("partition_spec", self._head()))
 
     def _current_bloom(self) -> list[str]:
         """Columns with parquet bloom filters enabled for future data
         commits (a table property, like the sort order)."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        return list((m or {}).get("bloom_cols") or [])
+        return list(self._prop("bloom_cols", self._head()))
 
     def _write_data_dir(
         self,
@@ -1313,23 +1367,7 @@ class MergeTable:
             for f in df.schema.fields
         ]
 
-    def _commit_locked(self, df: DataFrame) -> int:
-        cur = self.current_version()
-        v = self._next_version()
-        data_dir = f"d{v:06d}"
-        spec = self._current_spec()
-        self._write_data_dir(df, data_dir, spec, self._current_sort())
-        prev = self._load_manifest(cur) if cur else None
-        return self._commit_manifest(
-            v,
-            [data_dir],
-            self._schema_for(df, prev),
-            spec,
-            {data_dir: spec} if spec else {},
-            deletes=[],  # a full overwrite obsoletes pending deletes
-        )
-
-    # -- optimistic staging (lock-free data writes) ---------------------
+    # -- the commit path (optimistic, lock-free data writes) ------------
     def _stage(
         self,
         df: DataFrame,
@@ -1358,207 +1396,127 @@ class MergeTable:
     def _discard_stage(self, name: str) -> None:
         shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
-    def _promote_stage_locked(self, staged: str, v: int) -> str:
-        """Rename a staged dir to its committed d{v} name (cheap; under
-        the commit lock)."""
-        data_dir = f"d{v:06d}"
-        os.rename(
-            os.path.join(self.path, staged), os.path.join(self.path, data_dir)
-        )
-        return data_dir
+    def _stage_rewrite(
+        self, df: DataFrame, m: dict | None, sort_partitions: int | None = None
+    ):
+        """Stage ``df`` as the whole next snapshot over base manifest
+        ``m`` (None: the table's first commit) - the prepare step of
+        every copy-on-write writer.  The new dir replaces every data
+        dir, so pending deletes go: a rewrite read its input through
+        :meth:`read`, which applied them (Iceberg's rewrite purging
+        delete files), and an overwrite replaces the rows they hit."""
+        spec = self._prop("partition_spec", m)
+        staged = self._stage(df, spec, self._prop("sort_order", m), sort_partitions)
+        return staged, lambda data_dir, head: {
+            "data_dirs": [data_dir],
+            "schema": self._schema_for(df, m),
+            "dir_specs": {data_dir: spec} if spec else {},
+            "deletes": [],
+        }
 
-    def _optimistic_rewrite(
-        self,
-        spark,
-        build,
-        op: str,
-        max_retries: int = 6,
-        sort_partitions: int | None = None,
-    ) -> int:
-        """The optimistic-commit protocol shared by every copy-on-write
-        rewrite (merge/delete/update/compact): pin a base snapshot,
-        compute+stage ``build(current_df, base_manifest)`` with NO lock
-        held, then take the lock only to validate the base is still
-        current and flip the pointer; a concurrent commit in between
-        rebases and retries (no lost updates - the loser recomputes on
-        the new base), raising :class:`CommitConflict` after
-        ``max_retries``."""
-        for _ in range(max_retries):
-            base = self.current_version()
-            if base is None:
-                raise ValueError(f"{op}() on uncommitted table {self.path}")
+    def _optimistic_commit(self, op: str, prepare, validate=_same_head) -> int:
+        """The one protocol every data commit runs.  Each attempt pins
+        the head manifest ``m`` (None before the first commit) and calls
+        ``prepare(m)`` with NO lock held: it stages the commit's data
+        and returns ``(staged dir, changes)``, or None when there is
+        nothing to commit.  The lock is taken only to check
+        ``validate(m, head)`` against the manifest now current, rename
+        the stage to ``d{v}`` and commit ``head`` plus
+        ``changes(d{v}, head)``.  The default check - nothing committed
+        since the pin - is the rewrites' rule: a concurrent commit
+        makes the writer discard its stage and recompute on the new
+        head (no lost updates), up to ``_COMMIT_RETRIES`` attempts,
+        then :class:`CommitConflict`.  A prepare that fails while the
+        head moved (its base expired mid-scan) rebases the same way."""
+        for _ in range(_COMMIT_RETRIES):
+            m = self._head()
+            base = m and m["version"]
             try:
-                current = self.read(spark, base)
-            except ValueError:
-                continue  # base expired under a concurrent commit: rebase
-            man = self._load_manifest(base)
-            new_df = build(current, man)
-            # manifest-wins, INCLUDING a legitimately-empty spec/sort
-            # (spec evolution can DROP partitioning: `or` on the falsy
-            # [] would resurrect the constructor seed - _current_spec's
-            # distinction applied here)
-            if man is not None:
-                spec = list(man.get("partition_spec") or [])
-                sort = list(man.get("sort_order") or [])
-            else:
-                spec = list(self.partition_spec)
-                sort = list(self.sort_order)
-            try:
-                staged: str | None = self._stage(new_df, spec, sort, sort_partitions)
+                prepared = prepare(m)
             except Exception:
                 if self.current_version() != base:
-                    continue  # base GC'd mid-scan by a concurrent commit
+                    continue
                 raise
-            committed = False
+            if prepared is None:
+                return base
+            staged, changes = prepared
             try:
                 with _commit_lock(self.path):
-                    if self.current_version() == base:
+                    head = self._head()
+                    if validate(m, head):
                         v = self._next_version()
-                        data_dir = self._promote_stage_locked(staged, v)
-                        committed = True
+                        data_dir = f"d{v:06d}"
+                        os.rename(
+                            os.path.join(self.path, staged),
+                            os.path.join(self.path, data_dir),
+                        )
+                        staged = None
                         return self._commit_manifest(
-                            v,
-                            [data_dir],
-                            self._schema_for(new_df, man),
-                            spec,
-                            {data_dir: spec} if spec else {},
-                            op=op,
-                            # build() read through read(), which already
-                            # applied pending equality deletes - the
-                            # rewrite MATERIALIZES them (Iceberg's
-                            # rewrite purging delete files)
-                            deletes=[],
+                            v, head, op, **changes(data_dir, head)
                         )
             finally:
-                if not committed and staged is not None:
+                if staged is not None:
                     self._discard_stage(staged)
-            # conflict: loop rebases on the new current version
         raise CommitConflict(
-            f"{op}() on {self.path} lost {max_retries} optimistic-commit "
-            "races; raise max_retries or reduce writer contention"
+            f"{op} on {self.path} lost {_COMMIT_RETRIES} optimistic-commit "
+            "races; reduce writer contention"
         )
 
     def _commit_manifest(
-        self,
-        v: int,
-        data_dirs: list[str],
-        schema: list[dict],
-        partition_spec: list[str] | None = None,
-        dir_specs: dict[str, list[str]] | None = None,
-        key_cols: list[str] | None = None,
-        file_stats: dict[str, dict] | None = None,
-        sort_order: list[str] | None = None,
-        op: str = "overwrite",
-        deletes: list[dict] | None = None,
-        parent_override: int | None = None,
-        abandoned_head: int | None = None,
-        bloom_cols: list[str] | None = None,
+        self, v: int, parent: dict | None, op: str, **changes
     ) -> int:
-        """Manifest first, pointer second: a crash between the two
-        leaves a stale manifest the next commit overwrites (and whose
-        data dir the GC reclaims once unreferenced), never a pointer
-        to a missing snapshot.  ``key_cols`` persists the MERGE keys
-        (logical names) so a rename survives reconstruction; None
-        carries the currently-effective keys forward.
+        """Write manifest ``v`` as ``parent`` (None for a table's first
+        commit) plus ``changes``, then flip the pointer.  Every
+        ``_CARRIED`` field the commit does not change carries forward.
+        File stats (per-file [min, max] column bounds, the Iceberg
+        manifest-stats analog) carry per retained dir - dirs are
+        immutable once committed - and are read from the parquet
+        footers only for dirs the parent lacks.  The summary is
+        stamped here: ``parent`` is the parent's version (rollback
+        passes its restore target, so the rolled-back-over snapshots
+        leave the current ancestry and age out of retention),
+        ``operation`` is ``op`` (``overwrite`` for a first commit);
+        ``abandoned_head`` is recorded only when given (rollback: it
+        keeps the rolled-back-over chain retained as a roll-forward
+        target while this manifest lives).
 
-        ``file_stats`` (per-dir per-file [min, max] column bounds, the
-        Iceberg manifest-stats analog) defaults to: carry the previous
-        manifest's entry forward for every retained dir (dirs are
-        immutable once committed), collect from the parquet footers
-        for dirs it lacks (i.e. the dirs this commit wrote).
-
-        ``deletes`` (equality-delete entries, see
-        :func:`_delete_entries`) defaults to carrying the parent
-        manifest's forward - right for metadata-only commits and
-        fast appends, where existing data dirs (and so their pending
-        deletes) survive.  Rewrites that materialize the deletes pass
-        ``[]`` explicitly."""
-        parent = self.current_version()  # pointer not yet flipped
-        if deletes is None:
-            deletes = _delete_entries(self._load_manifest(parent) if parent else None)
-        if file_stats is None:
-            prev = self._load_manifest(parent) if parent else None
-            prev_stats = (prev or {}).get("file_stats") or {}
-            file_stats = {
-                d: (
-                    prev_stats[d]
-                    if d in prev_stats
-                    else _collect_dir_stats(os.path.join(self.path, d))
-                )
-                for d in data_dirs
-            }
-        _atomic_write(
-            self._manifest_path(v),
-            json.dumps(
-                {
-                    "version": v,
-                    "data_dirs": data_dirs,
-                    "schema": schema,
-                    "partition_spec": partition_spec or [],
-                    "dir_specs": dir_specs or {},
-                    "key_cols": (
-                        key_cols
-                        if key_cols is not None
-                        else list(self._effective_keys())
-                    ),
-                    "file_stats": file_stats,
-                    "deletes": deletes,
-                    # like key_cols: None carries the current order
-                    # forward (manifest's, else the constructor seed)
-                    "sort_order": (
-                        sort_order
-                        if sort_order is not None
-                        else self._current_sort()
-                    ),
-                    # like sort_order: None carries the property
-                    # forward (pointer not yet flipped, so
-                    # _current_bloom() is the parent's)
-                    "bloom_cols": (
-                        bloom_cols
-                        if bloom_cols is not None
-                        else self._current_bloom()
-                    ),
-                    # snapshot summary (Iceberg's snapshot operation +
-                    # timestamp metadata)
-                    "operation": op,
-                    # commit lineage: the ref head this commit was
-                    # built on (None for a bootstrap) - ancestry for
-                    # branch GC and fast-forward walks.  rollback
-                    # overrides it with the RESTORE TARGET (Iceberg:
-                    # the rolled-back-over snapshots leave the current
-                    # ancestry and age out of retention)
-                    "parent": parent if parent_override is None else parent_override,
-                    # rollback only: the head this commit abandoned
-                    # (keeps the rolled-back-over chain retained as a
-                    # roll-forward target while THIS manifest lives)
-                    **(
-                        {"abandoned_head": abandoned_head}
-                        if abandoned_head is not None
-                        else {}
-                    ),
-                    # microsecond precision: second-truncation made
-                    # TIMESTAMP AS OF resolve to snapshots committed
-                    # *later* within the same wall-clock second
-                    "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(
-                        timespec="microseconds"
-                    ),
-                }
-            ),
+        Manifest first, pointer second: a crash between the two leaves
+        a stale manifest the next commit overwrites (and whose data dir
+        the GC reclaims once unreferenced), never a pointer to a
+        missing snapshot."""
+        man = {"version": v}
+        for f in _CARRIED:
+            man[f] = changes[f] if f in changes else self._prop(f, parent)
+        stats = parent["file_stats"] if parent else {}
+        man["file_stats"] = {
+            d: (
+                stats[d]
+                if d in stats
+                else _collect_dir_stats(os.path.join(self.path, d))
+            )
+            for d in man["data_dirs"]
+        }
+        man["operation"] = op if parent else "overwrite"
+        man["parent"] = parent["version"] if parent else None
+        if "abandoned_head" in changes:
+            man["abandoned_head"] = changes["abandoned_head"]
+        # microsecond precision: second-truncation made TIMESTAMP AS OF
+        # resolve to snapshots committed *later* within the same second
+        man["committed_at"] = _dt.datetime.now(_dt.timezone.utc).isoformat(
+            timespec="microseconds"
         )
+        _atomic_write(self._manifest_path(v), json.dumps(man))
         _atomic_write(self._pointer(), str(v))
         self._expire_and_gc_locked(v)
         return v
 
     def _ancestors(self, v: int | None, n: int) -> list[int]:
         """Up to ``n`` versions of a ref's own history, newest first,
-        following each manifest's ``parent`` link (pre-lineage legacy
-        manifests - which EXIST but predate the ``parent`` field -
-        fall back to the numeric predecessor, which IS their parent;
-        they predate branching).  A MISSING manifest means snapshot
-        expiry truncated this ref's chain: stop there - guessing
-        ``v - 1`` would walk into a numerically-adjacent version that
-        may belong to ANOTHER branch's retained history (time travel
-        would then read unpublished branch data)."""
+        following each manifest's ``parent`` link.  A MISSING manifest
+        means snapshot expiry truncated this ref's chain: stop there -
+        guessing ``v - 1`` would walk into a numerically-adjacent
+        version that may belong to ANOTHER branch's retained history
+        (time travel would then read unpublished branch data)."""
         out: list[int] = []
         seen: set[int] = set()
         while v and len(out) < n and v not in seen:
@@ -1567,7 +1525,7 @@ class MergeTable:
                 break  # expired ancestor: chain truncated, never guess
             seen.add(v)
             out.append(v)
-            v = v - 1 if "parent" not in m else m["parent"]
+            v = m["parent"]
         return out
 
     def _expire_and_gc_locked(self, cur: int) -> list[str]:
@@ -1624,8 +1582,6 @@ class MergeTable:
             else:
                 os.unlink(os.path.join(self.path, entry))
                 removed.append(entry)
-        # legacy data dirs double as their own manifest
-        referenced.update(f"v{v:06d}" for v in keep)
         import time as _time
 
         now = _time.time()
@@ -1667,18 +1623,9 @@ class MergeTable:
         to_v = cur if to_version is None else to_version
         m_from = self._load_manifest(from_version)
         m_to = self._load_manifest(to_v)
-        if m_from is not None and m_to is not None:
+        if _append_only(m_from, m_to):
             d_from, d_to = _data_dirs(m_from), _data_dirs(m_to)
-            if (
-                d_to[: len(d_from)] == d_from
-                and len(d_to) > len(d_from)
-                and [f["name"] for f in m_from["schema"]]
-                == [f["name"] for f in m_to["schema"]]
-                # a merge-on-read delete in the interval can remove
-                # rows from the NEW dirs too (its applies_to covers
-                # them); dir lineage alone no longer proves the delta
-                and _delete_entries(m_from) == _delete_entries(m_to)
-            ):
+            if len(d_to) > len(d_from):
                 new_dirs = [os.path.join(self.path, d) for d in d_to[len(d_from):]]
                 if all(os.path.isdir(d) for d in new_dirs):
                     # per-dir scans unioned (same as read()): a single
@@ -1700,21 +1647,9 @@ class MergeTable:
                         if f["physical"] is not None
                     ]
                     return df.select(*cols)
-        after = self.read(spark, to_v)
-        before = self.read(spark, from_version)
-        shared = [c for c in after.columns if c in before.columns]
-        # NULL-safe equality per shared column: a bare column-list
-        # equi-join never matches a row containing NULL (e.g. the
-        # default-NULL values merge(evolve_schema=True)/add_column
-        # produce), which would re-report identical rows as changes on
-        # every incremental read
-
-        before_s = before.select(*shared)
-        cond = reduce(
-            lambda x, y: x & y,
-            [after[c].eqNullSafe(before_s[c]) for c in shared],
+        return _rows_not_in(
+            self.read(spark, to_v), self.read(spark, from_version)
         )
-        return after.join(before_s, cond, "left_anti")
 
     def read_changelog(
         self, spark: SparkSession, from_version: int, to_version: int | None = None
@@ -1737,27 +1672,13 @@ class MergeTable:
         inserts = self.read_changes(spark, from_version, to_v).select(
             "*", F.lit("insert").alias("_change_type")
         )
-        m_from, m_to = self._load_manifest(from_version), self._load_manifest(to_v)
-        if (
-            m_from is not None
-            and m_to is not None
-            and _data_dirs(m_to)[: len(_data_dirs(m_from))] == _data_dirs(m_from)
-            and [f["name"] for f in m_from["schema"]]
-            == [f["name"] for f in m_to["schema"]]
-            and _delete_entries(m_from) == _delete_entries(m_to)
+        if _append_only(
+            self._load_manifest(from_version), self._load_manifest(to_v)
         ):
-            # append-only interval: nothing was deleted
-            return inserts
+            return inserts  # nothing was deleted
         after = self.read(spark, to_v)
         before = self.read(spark, from_version)
-        shared = [c for c in before.columns if c in after.columns]
-
-        after_s = after.select(*shared)
-        cond = reduce(
-            lambda x, y: x & y,
-            [before[c].eqNullSafe(after_s[c]) for c in shared],
-        )
-        deletes = before.join(after_s, cond, "left_anti").select(
+        deletes = _rows_not_in(before, after).select(
             "*", F.lit("delete").alias("_change_type")
         )
         # schemas may differ across an evolution: align on the union
@@ -1791,7 +1712,7 @@ class MergeTable:
                     "columns": [f["name"] for f in m["schema"]],
                     "current": m["version"] == self.current_version(),
                     "tags": sorted(t for t, v in refs.items() if v == m["version"]),
-                    # summary (absent on legacy manifests)
+                    # snapshot summary
                     "operation": m.get("operation"),
                     "committed_at": m.get("committed_at"),
                     "n_files": (
@@ -1956,45 +1877,22 @@ class MergeTable:
         duplicates its manifest (versions stay monotonic; the bad
         snapshot ages out of retention instead of being erased)."""
         with _commit_lock(self.path):
-            cur = self.current_version()
-            if cur is None:
+            head = self._head()
+            if head is None:
                 raise ValueError(f"rollback on uncommitted table {self.path}")
-            m = self._load_manifest(version)
-            if m is None or not all(
-                os.path.isdir(os.path.join(self.path, d))
-                for d in _data_dirs(m)
-                + [e["dir"] for e in _delete_entries(m)]
-            ):
-                raise ValueError(
-                    f"version {version} not retained (current {cur}, "
-                    f"keep_versions {self.keep_versions})"
-                )
+            # the new manifest is the TARGET's (its keys go with its
+            # schema, so a rollback across a key-column rename stays
+            # consistent; its pending deletes go with its dirs), with
+            # the target as parent: the rolled-back-over snapshots
+            # leave the current ancestry, while abandoned_head keeps
+            # them retained as a roll-forward target.  The bloom
+            # columns stay the head's.
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
-                m["schema"],
-                m.get("partition_spec") or [],
-                m.get("dir_specs") or {},
-                # restore the TARGET snapshot's keys with its schema: a
-                # rollback across a key-column rename must not leave
-                # current-named keys pointing into the restored (old-
-                # named) schema
-                key_cols=m.get("key_cols") or list(self.key_cols),
-                # the target's stats travel with its dirs (a legacy
-                # no-stats target falls back to footer collection)
-                file_stats=m.get("file_stats"),
-                sort_order=list(m.get("sort_order") or []),
-                op="rollback",
-                # restore the TARGET's pending deletes (its delete dirs
-                # are retention-checked above alongside its data dirs)
-                deletes=_delete_entries(m),
-                # lineage points at the restore target, not the bad
-                # head: the rolled-back-over snapshots are no longer
-                # current ancestors and expire on their own - but the
-                # abandoned chain stays retained (roll-forward target)
-                # while this rollback manifest is itself retained
-                parent_override=version,
-                abandoned_head=cur,
+                self._retained(version, head["version"]),
+                "rollback",
+                bloom_cols=self._prop("bloom_cols", head),
+                abandoned_head=head["version"],
             )
 
     def remove_orphans(self) -> list[str]:
@@ -2027,10 +1925,7 @@ class MergeTable:
             )
 
             def fresh(v: int) -> bool:
-                m = self._load_manifest(v)
-                ts = (m or {}).get("committed_at")
-                if ts is None:
-                    return False  # legacy manifests have no timestamp
+                ts = self._load_manifest(v)["committed_at"]
                 return _dt.datetime.fromisoformat(ts) >= cutoff
 
             keep: set[int] = set()
@@ -2054,137 +1949,103 @@ class MergeTable:
             return self._sweep_locked(keep)
 
     # -- schema evolution (metadata-only commits) ---------------------
-    def _require_manifest_locked(self) -> dict:
-        cur = self.current_version()
-        if cur is None:
-            raise ValueError(f"schema evolution on uncommitted table {self.path}")
-        m = self._load_manifest(cur)
-        if m is None:
-            raise ValueError(
-                f"legacy table {self.path} has no manifest; run compact() "
-                "once to materialize one before evolving the schema"
-            )
-        return m
+    def _commit_metadata(self, op: str, change) -> int:
+        """A metadata-only commit: under the commit lock,
+        ``change(head manifest)`` validates the request and returns the
+        manifest fields it changes; everything else carries forward."""
+        with _commit_lock(self.path):
+            m = self._head()
+            if m is None:
+                raise ValueError(f"schema evolution on uncommitted table {self.path}")
+            return self._commit_manifest(self._next_version(), m, op, **change(m))
 
     def add_column(self, name: str, dtype: str, default=None) -> int:
         """Iceberg ``ALTER TABLE ADD COLUMN`` analog: a metadata-only
         commit - no data is rewritten; existing rows read ``default``
         (null unless given; must be JSON-serializable).  ``dtype`` is a
         Spark DDL type string ("bigint", "string", ...)."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
+
+        def change(m: dict) -> dict:
             if any(f["name"] == name for f in m["schema"]):
                 raise ValueError(f"column {name!r} already exists")
-            schema = m["schema"] + [
-                {"name": name, "type": dtype, "physical": None, "default": default}
-            ]
-            return self._commit_manifest(
-                self._next_version(),
-                _data_dirs(m),
-                schema,
-                m.get("partition_spec") or [],
-                m.get("dir_specs") or {},
-                op="add-column",
-            )
+            added = {"name": name, "type": dtype, "physical": None, "default": default}
+            return {"schema": m["schema"] + [added]}
+
+        return self._commit_metadata("add-column", change)
 
     def rename_column(self, old: str, new: str) -> int:
         """Iceberg ``ALTER TABLE RENAME COLUMN`` analog: metadata-only;
         the data files keep the old physical name and reads map it to
         the new logical name (the field-id trick, minus field ids)."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            names = {f["name"] for f in m["schema"]}
-            if old not in names:
-                raise ValueError(f"no column {old!r}")
-            if new in names:
-                raise ValueError(f"column {new!r} already exists")
-            schema = [
-                {**f, "name": new} if f["name"] == old else f for f in m["schema"]
-            ]
-            # the keys are table metadata: persist the renamed form in
-            # the manifest so a MergeTable constructed later (with the
-            # pre-rename constructor seed) still resolves the right
-            # columns via _effective_keys()
-            keys = [new if k == old else k for k in self._effective_keys()]
-            if old in self.key_cols:
-                self.key_cols = tuple(
-                    new if k == old else k for k in self.key_cols
-                )
+
+        def ren(c: str) -> str:
+            return new if c == old else c
+
+        def ren_spec(s: str) -> str:
             # the spec names logical columns (it applies at write time
             # to logical-named DataFrames), so a rename follows through
             # - including inside transform entries like hours(old).
             # Existing dirs keep their old-era layout; pruning matches
             # them through the physical-name mapping.
-            def _ren(s: str) -> str:
-                pf = parse_partition_spec([s])[0]
-                if pf.source != old:
-                    return s
-                if pf.transform == "identity":
-                    return new
-                arg = f"{pf.arg}, " if pf.arg is not None else ""
-                return f"{pf.transform}({arg}{new})"
+            pf = parse_partition_spec([s])[0]
+            if pf.source != old:
+                return s
+            if pf.transform == "identity":
+                return new
+            arg = f"{pf.arg}, " if pf.arg is not None else ""
+            return f"{pf.transform}({arg}{new})"
 
-            spec = [_ren(c) for c in (m.get("partition_spec") or [])]
-            # sort order and bloom columns name LOGICAL columns too:
-            # left un-renamed they would silently stop clustering /
-            # filtering (the `c in df.columns` guard drops them) while
-            # still blocking zorder compaction on the stale name
-            sort = [new if c == old else c for c in (m.get("sort_order") or [])]
-            bloom = [new if c == old else c for c in (m.get("bloom_cols") or [])]
-            # pending equality deletes reference the keys by LOGICAL
-            # name; the delete files keep the old physical column (the
-            # same field-id trick as the data files)
-            dels = [
-                (
-                    {
-                        **e,
-                        "cols": [
-                            {**c, "name": new if c["name"] == old else c["name"]}
-                            for c in e["cols"]
-                        ],
-                    }
+        def change(m: dict) -> dict:
+            names = {f["name"] for f in m["schema"]}
+            if old not in names:
+                raise ValueError(f"no column {old!r}")
+            if new in names:
+                raise ValueError(f"column {new!r} already exists")
+            changes = {
+                "schema": [{**f, "name": ren(f["name"])} for f in m["schema"]],
+                # the keys are table metadata: the renamed form persists
+                # so a MergeTable constructed later (with the
+                # pre-rename constructor seed) still resolves them
+                "key_cols": [ren(k) for k in self._prop("key_cols", m)],
+                "partition_spec": [ren_spec(s) for s in m["partition_spec"]],
+                # sort order and bloom columns name LOGICAL columns
+                # too: left un-renamed they would silently stop
+                # clustering / filtering (the `c in df.columns` guard
+                # drops them) while still blocking zorder compaction
+                "sort_order": [ren(c) for c in m["sort_order"]],
+                "bloom_cols": [ren(c) for c in m["bloom_cols"]],
+                # pending equality deletes reference the keys by
+                # LOGICAL name; the delete files keep the old physical
+                # column (the same field-id trick as the data files).
+                # Position deletes carry no key columns.
+                "deletes": [
+                    {**e, "cols": [{**c, "name": ren(c["name"])} for c in e["cols"]]}
                     if e.get("cols")
-                    else e  # position deletes carry no key columns
-                )
-                for e in _delete_entries(m)
-            ]
-            return self._commit_manifest(
-                self._next_version(),
-                _data_dirs(m),
-                schema,
-                spec,
-                m.get("dir_specs") or {},
-                key_cols=keys,
-                sort_order=sort,
-                bloom_cols=bloom,
-                op="rename-column",
-                deletes=dels,
-            )
+                    else e
+                    for e in _delete_entries(m)
+                ],
+            }
+            self.key_cols = tuple(ren(k) for k in self.key_cols)
+            return changes
+
+        return self._commit_metadata("rename-column", change)
 
     def drop_column(self, name: str) -> int:
         """Iceberg ``ALTER TABLE DROP COLUMN`` analog: metadata-only -
         the field leaves the manifest schema (reads stop projecting
         it), the data files keep their bytes until the next rewrite.
         Key and partition columns cannot be dropped."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            if name in self._effective_keys():
+
+        def change(m: dict) -> dict:
+            if name in self._prop("key_cols", m):
                 raise ValueError(f"cannot drop key column {name!r}")
-            if name in {
-                pf.source for pf in parse_partition_spec(m.get("partition_spec") or [])
-            }:
+            if name in {pf.source for pf in parse_partition_spec(m["partition_spec"])}:
                 raise ValueError(f"cannot drop partition column {name!r}")
             if not any(f["name"] == name for f in m["schema"]):
                 raise ValueError(f"no column {name!r}")
-            schema = [f for f in m["schema"] if f["name"] != name]
-            return self._commit_manifest(
-                self._next_version(),
-                _data_dirs(m),
-                schema,
-                m.get("partition_spec") or [],
-                m.get("dir_specs") or {},
-                op="drop-column",
-            )
+            return {"schema": [f for f in m["schema"] if f["name"] != name]}
+
+        return self._commit_metadata("drop-column", change)
 
     def set_partition_spec(self, *cols: str) -> int:
         """Iceberg partition-spec evolution analog: a metadata-only
@@ -2197,22 +2058,17 @@ class MergeTable:
         ``months(ts)``, ``years(ts)``, ``bucket(N, col)``,
         ``truncate(W, col)``); the spec engages at the next data
         commit (merge/append/compact)."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
+
+        def change(m: dict) -> dict:
             names = {f["name"] for f in m["schema"]}
             unknown = [
                 pf.spec for pf in parse_partition_spec(cols) if pf.source not in names
             ]
             if unknown:
                 raise ValueError(f"partition spec references unknown columns {unknown}")
-            return self._commit_manifest(
-                self._next_version(),
-                _data_dirs(m),
-                m["schema"],
-                list(cols),
-                m.get("dir_specs") or {},
-                op="set-partition-spec",
-            )
+            return {"partition_spec": list(cols)}
+
+        return self._commit_metadata("set-partition-spec", change)
 
     def set_sort_order(self, *cols: str) -> int:
         """Iceberg ``replace_sort_order`` analog: a metadata-only
@@ -2223,21 +2079,14 @@ class MergeTable:
         sort on these columns so each data file covers a narrow slice
         of the key - the layout that makes manifest min/max skipping
         selective."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            names = {f["name"] for f in m["schema"]}
-            unknown = [c for c in cols if c not in names]
+
+        def change(m: dict) -> dict:
+            unknown = [c for c in cols if c not in {f["name"] for f in m["schema"]}]
             if unknown:
                 raise ValueError(f"sort order references unknown columns {unknown}")
-            return self._commit_manifest(
-                self._next_version(),
-                _data_dirs(m),
-                m["schema"],
-                list(m.get("partition_spec") or []),
-                m.get("dir_specs") or {},
-                sort_order=list(cols),
-                op="set-sort-order",
-            )
+            return {"sort_order": list(cols)}
+
+        return self._commit_metadata("set-sort-order", change)
 
     def set_bloom_filters(self, *cols: str) -> int:
         """Enable parquet bloom filters on ``cols`` for FUTURE data
@@ -2248,25 +2097,33 @@ class MergeTable:
         (random keys span every file's range); the parquet reader
         consumes them transparently at row-group granularity.  Pass no
         cols to disable."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            names = {f["name"] for f in m["schema"]}
-            unknown = [c for c in cols if c not in names]
+
+        def change(m: dict) -> dict:
+            unknown = [c for c in cols if c not in {f["name"] for f in m["schema"]}]
             if unknown:
                 raise ValueError(f"bloom filters reference unknown columns {unknown}")
-            return self._commit_manifest(
-                self._next_version(),
-                _data_dirs(m),
-                m["schema"],
-                list(m.get("partition_spec") or []),
-                m.get("dir_specs") or {},
-                op="set-bloom-filters",
-                bloom_cols=list(cols),
-            )
+            return {"bloom_cols": list(cols)}
+
+        return self._commit_metadata("set-bloom-filters", change)
 
     # -- write API ----------------------------------------------------
     def overwrite(self, df: DataFrame) -> int:
-        return self._commit(df)
+        """Replace the table's contents with ``df`` (reads nothing)."""
+        return self._optimistic_commit(
+            "overwrite", lambda m: self._stage_rewrite(df, m)
+        )
+
+    def _rewrite(self, spark: SparkSession, op: str, build, sort_partitions=None) -> int:
+        """Copy-on-write commit: the next snapshot is
+        ``build(current frame, base manifest)`` over the pinned base."""
+
+        def prepare(m: dict | None):
+            if m is None:
+                raise ValueError(f"{op}() on uncommitted table {self.path}")
+            new_df = build(self.read(spark, m["version"]), m)
+            return self._stage_rewrite(new_df, m, sort_partitions)
+
+        return self._optimistic_commit(op, prepare)
 
     @staticmethod
     def _check_append_schema(m: dict, updates: DataFrame, path: str) -> None:
@@ -2299,71 +2156,52 @@ class MergeTable:
         Iceberg's rule) write their data concurrently and serialize
         only on metadata.  A concurrent schema rewrite that
         invalidates the staged files raises :class:`CommitConflict`."""
-        cur = self.current_version()
-        if cur is None:
-            with _commit_lock(self.path):
-                if self.current_version() is None:
-                    return self._commit_locked(updates)
-            cur = self.current_version()  # lost the bootstrap race
-        m = self._load_manifest(cur)
-        if m is None:
-            raise ValueError(
-                f"legacy table {self.path} has no manifest; run compact() "
-                "once before append()"
+
+        def prepare(m: dict | None):
+            if m is None:
+                return self._stage_rewrite(updates, None)  # first commit
+            self._check_append_schema(m, updates, self.path)
+            spec = m["partition_spec"]
+            # coerce to the table's recorded types (Iceberg appends
+            # write the table schema): without the cast, an int64-typed
+            # source landing beside an int32 dir poisons every
+            # subsequent multi-dir read with a parquet type mismatch
+            aligned = updates.select(
+                *[
+                    F.col(f["name"]).cast(f["type"]).alias(f["name"])
+                    for f in m["schema"]
+                ]
             )
-        self._check_append_schema(m, updates, self.path)
-        spec = list(m.get("partition_spec") or [])
-        # coerce to the table's recorded types (Iceberg appends
-        # write the table schema): without the cast, an int64-typed
-        # source landing beside an int32 dir poisons every
-        # subsequent multi-dir read with a parquet type mismatch
-        aligned = updates.select(
-            *[
-                F.col(f["name"]).cast(f["type"]).alias(f["name"])
-                for f in m["schema"]
-            ]
-        )
-        staged: str | None = self._stage(
-            aligned, spec, list(m.get("sort_order") or [])
-        )  # lock-free
-        try:
-            with _commit_lock(self.path):
-                cur2 = self.current_version()
-                m2 = self._load_manifest(cur2)
-                if m2 is None:
-                    raise CommitConflict(
-                        f"table {self.path} lost its manifest mid-append"
-                    )
-                if [
-                    (f["name"], f["physical"], f["type"]) for f in m2["schema"]
-                ] != [(f["name"], f["physical"], f["type"]) for f in m["schema"]]:
-                    raise CommitConflict(
-                        "a concurrent schema rewrite invalidated this "
-                        "append's staged files; re-run append()"
-                    )
-                v = self._next_version()
-                data_dir = self._promote_stage_locked(staged, v)
-                staged = None
-                dir_specs = dict(m2.get("dir_specs") or {})
+            staged = self._stage(aligned, spec, m["sort_order"])
+
+            def changes(data_dir: str, head: dict) -> dict:
+                out = {"data_dirs": _data_dirs(head) + [data_dir]}
                 if spec:
-                    dir_specs[data_dir] = spec
-                return self._commit_manifest(
-                    v,
-                    _data_dirs(m2) + [data_dir],
-                    m2["schema"],
-                    list(m2.get("partition_spec") or []),
-                    dir_specs,
-                    op="append",
+                    out["dir_specs"] = {**head["dir_specs"], data_dir: spec}
+                return out
+
+            return staged, changes
+
+        def validate(m: dict | None, head: dict | None) -> bool:
+            if m is None:
+                return head is None  # else lost the first-commit race: rebase
+
+            def physical(x: dict) -> list:
+                return [(f["name"], f["physical"], f["type"]) for f in x["schema"]]
+
+            if head is None or physical(head) != physical(m):
+                raise CommitConflict(
+                    "a concurrent schema rewrite invalidated this "
+                    "append's staged files; re-run append()"
                 )
-        finally:
-            if staged is not None:
-                self._discard_stage(staged)
+            return True
+
+        return self._optimistic_commit("append", prepare, validate)
 
     def merge(
         self,
         updates: DataFrame,
         evolve_schema: bool = False,
-        max_retries: int = 6,
         when_not_matched_by_source: str = "keep",
     ) -> int:
         """MERGE INTO this table USING updates ON key_cols:
@@ -2391,21 +2229,16 @@ class MergeTable:
         still current and flip the pointer.  A concurrent commit in
         between invalidates the staged snapshot - the merge recomputes
         on the new base and retries (no lost updates: the loser always
-        rebases), raising :class:`CommitConflict` after
-        ``max_retries``."""
+        rebases), raising :class:`CommitConflict` after a fixed number
+        of lost races."""
         if when_not_matched_by_source not in ("keep", "delete"):
             raise ValueError(
                 f"unknown when_not_matched_by_source "
                 f"{when_not_matched_by_source!r}"
             )
         spark = updates.sparkSession
-        if self.current_version() is None:
-            with _commit_lock(self.path):
-                if self.current_version() is None:
-                    return self._commit_locked(updates)
-            # lost the bootstrap race: fall through as a real merge
 
-        def build(current: DataFrame, man: dict | None) -> DataFrame:
+        def build(current: DataFrame, man: dict) -> DataFrame:
             ups = updates
             # keys from the PINNED base manifest (like every other
             # base-pinned input here), not _effective_keys(): a
@@ -2413,7 +2246,7 @@ class MergeTable:
             # otherwise make the join target a column the base snapshot
             # doesn't have, failing with AnalysisException instead of
             # rebasing at the conflict check.
-            keys = list((man or {}).get("key_cols") or self.key_cols)
+            keys = self._prop("key_cols", man)
             table_cols = current.columns
             extra = [c for c in ups.columns if c not in table_cols]
             if extra and not evolve_schema:
@@ -2424,11 +2257,7 @@ class MergeTable:
             missing = [c for c in table_cols if c not in ups.columns]
             types = {f.name: f.dataType for f in current.schema.fields}
             if missing:
-                defaults = (
-                    {f["name"]: f.get("default") for f in man["schema"]}
-                    if man
-                    else {}
-                )
+                defaults = {f["name"]: f.get("default") for f in man["schema"]}
                 for c in missing:
                     ups = ups.withColumn(c, F.lit(defaults.get(c)).cast(types[c]))
             # coerce shared columns to the table's recorded types (the
@@ -2453,7 +2282,12 @@ class MergeTable:
                 current.join(ups.select(*keys), keys, "left_anti")
             )
 
-        return self._optimistic_rewrite(spark, build, "merge", max_retries)
+        def prepare(m: dict | None):
+            if m is None:
+                return self._stage_rewrite(updates, None)  # first commit
+            return self._stage_rewrite(build(self.read(spark, m["version"]), m), m)
+
+        return self._optimistic_commit("merge", prepare)
 
     def delete_where(
         self,
@@ -2493,28 +2327,24 @@ class MergeTable:
             duplicate keys, and the reads need no key columns."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode == "copy-on-write":
-            return self._optimistic_rewrite(
+            return self._rewrite(
                 spark,
-                lambda df, man: df.filter(~F.coalesce(cond, F.lit(False))),
                 "delete_where",
+                lambda df, man: df.filter(~F.coalesce(cond, F.lit(False))),
             )
         if mode != "merge-on-read":
             raise ValueError(f"unknown delete mode {mode!r}")
         if form not in ("equality", "position"):
             raise ValueError(f"unknown delete form {form!r}")
 
-        def build(m: dict, base: int) -> DataFrame | None:
-            try:
-                current = self.read(spark, base, _pos=(form == "position"))
-            except ValueError:
-                return None  # base expired under a concurrent commit
+        def build(m: dict) -> DataFrame:
+            current = self.read(spark, m["version"], _pos=(form == "position"))
             hit = current.filter(F.coalesce(cond, F.lit(False)))
             if form == "position":
                 return hit.select("_pos_file", "_pos_row")
-            keys = list(m.get("key_cols") or self.key_cols)
-            return hit.select(*keys).distinct()
+            return hit.select(*self._prop("key_cols", m)).distinct()
 
-        return self._delete_mor(spark, build, form)
+        return self._delete_mor(build, form)
 
     def delete_keys(self, spark: SparkSession, keys_df: DataFrame) -> int:
         """Merge-on-read delete BY KEY SET: commit ``keys_df`` (one
@@ -2525,8 +2355,8 @@ class MergeTable:
         (:func:`apply_changes_stream` uses this).  Keys for rows not
         present simply match nothing.  Optimistic like every writer."""
 
-        def build(m: dict, base: int) -> DataFrame:
-            keys = list(m.get("key_cols") or self.key_cols)
+        def build(m: dict) -> DataFrame:
+            keys = self._prop("key_cols", m)
             missing = [k for k in keys if k not in keys_df.columns]
             if missing:
                 raise ValueError(f"delete_keys() missing key columns {missing}")
@@ -2535,68 +2365,28 @@ class MergeTable:
                 *[F.col(k).cast(types[k]).alias(k) for k in keys]
             ).distinct()
 
-        return self._delete_mor(spark, build, "equality")
+        return self._delete_mor(build, "equality")
 
-    def _delete_mor(
-        self, spark: SparkSession, build, form: str, max_retries: int = 6
-    ) -> int:
+    def _delete_mor(self, build, form: str) -> int:
         """Merge-on-read delete commit: stage the delete file
-        (``build(manifest, base_version)`` -> keys or positions) with
-        no lock held, take the lock only to validate the base snapshot
-        is still current and flip the pointer (the same optimistic
-        protocol as every writer here)."""
-        for _ in range(max_retries):
-            base = self.current_version()
-            if base is None:
-                raise ValueError(f"delete_where() on uncommitted table {self.path}")
-            m = self._load_manifest(base)
+        ``build(base manifest)`` (keys or positions) and add it to the
+        pending deletes, applying to the base's data dirs."""
+
+        def prepare(m: dict | None):
             if m is None:
-                raise ValueError(
-                    f"legacy table {self.path} has no manifest; run compact() "
-                    "once before merge-on-read deletes"
-                )
-            keys = list(m.get("key_cols") or self.key_cols)
-            dels = build(m, base)
-            if dels is None:
-                continue  # base expired under a concurrent commit: rebase
-            staged: str | None = self._stage(dels.coalesce(1), [])
-            committed = False
-            try:
-                with _commit_lock(self.path):
-                    if self.current_version() == base:
-                        v = self._next_version()
-                        ddir = self._promote_stage_locked(staged, v)
-                        committed = True
-                        entry = {
-                            "dir": ddir,
-                            "applies_to": _data_dirs(m),
-                            "kind": form,
-                        }
-                        if form == "equality":
-                            # the delete file was WRITTEN from the
-                            # logical frame, so its physical columns
-                            # carry the logical names as of now
-                            entry["cols"] = [
-                                {"name": k, "physical": k} for k in keys
-                            ]
-                        return self._commit_manifest(
-                            v,
-                            _data_dirs(m),
-                            m["schema"],
-                            list(m.get("partition_spec") or []),
-                            m.get("dir_specs") or {},
-                            file_stats=m.get("file_stats"),
-                            op="delete-mor",
-                            deletes=_delete_entries(m) + [entry],
-                        )
-            finally:
-                if not committed and staged is not None:
-                    self._discard_stage(staged)
-            # conflict: rebase on the new current version
-        raise CommitConflict(
-            f"delete_where(mode='merge-on-read') on {self.path} lost "
-            f"{max_retries} optimistic-commit races"
-        )
+                raise ValueError(f"delete_where() on uncommitted table {self.path}")
+            staged = self._stage(build(m).coalesce(1), [])
+            entry = {"applies_to": _data_dirs(m), "kind": form}
+            if form == "equality":
+                # the delete file was WRITTEN from the logical frame, so
+                # its physical columns carry the logical names as of now
+                keys = self._prop("key_cols", m)
+                entry["cols"] = [{"name": k, "physical": k} for k in keys]
+            return staged, lambda ddir, head: {
+                "deletes": _delete_entries(m) + [{"dir": ddir, **entry}]
+            }
+
+        return self._optimistic_commit("delete-mor", prepare)
 
     def update_where(self, spark: SparkSession, condition, assignments: dict) -> int:
         """Iceberg ``UPDATE t SET col = expr WHERE cond`` (copy-on-write):
@@ -2633,7 +2423,7 @@ class MergeTable:
                 ]
             )
 
-        return self._optimistic_rewrite(spark, build, "update_where")
+        return self._rewrite(spark, "update_where", build)
 
     def compact(
         self,
@@ -2689,19 +2479,20 @@ class MergeTable:
             target_files = max(1, -(-total // (target_mb * 1024 * 1024)))
 
         if zorder:
-            if self._current_sort():
+            sort = self._prop("sort_order", self._head())
+            if sort:
                 raise ValueError(
                     "zorder compaction conflicts with the table sort order "
-                    f"{self._current_sort()}; set_sort_order() (no args) first"
+                    f"{sort}; set_sort_order() (no args) first"
                 )
-            return self._optimistic_rewrite(
+            return self._rewrite(
                 spark,
-                lambda df, man: _zorder_layout(df, list(zorder), target_files),
                 "compact",
+                lambda df, man: _zorder_layout(df, list(zorder), target_files),
             )
 
-        def build(df: DataFrame, man: dict | None) -> DataFrame:
-            if (man or {}).get("sort_order"):
+        def build(df: DataFrame, man: dict) -> DataFrame:
+            if man["sort_order"]:
                 return df  # the clustered write performs the layout
             # repartition, not coalesce: coalesce can only MERGE input
             # partitions, so it silently under-produces files when the
@@ -2711,9 +2502,7 @@ class MergeTable:
             # shrinks at the end)
             return df.repartition(target_files)
 
-        return self._optimistic_rewrite(
-            spark, build, "compact", sort_partitions=target_files
-        )
+        return self._rewrite(spark, "compact", build, sort_partitions=target_files)
 
     def _scoped_compact(
         self, spark: SparkSession, where: str, target_files: int
@@ -2743,19 +2532,15 @@ class MergeTable:
         conjs = _parse_conjuncts(where)
         if not conjs:
             raise ValueError(f"no projectable conjuncts in {where!r}")
-        for _ in range(6):
-            base = self.current_version()
-            if base is None:
-                raise ValueError(f"compact() on uncommitted table {self.path}")
-            m = self._load_manifest(base)
+
+        def prepare(m: dict | None):
             if m is None:
-                raise ValueError("scoped compaction needs a manifest table")
-            spec = list(m.get("partition_spec") or [])
+                raise ValueError(f"compact() on uncommitted table {self.path}")
+            spec = m["partition_spec"]
             if not spec:
                 raise ValueError("scoped compaction needs a partitioned table")
             names = _data_dirs(m)
-            dir_specs = m.get("dir_specs") or {}
-            if any((dir_specs.get(n) or []) != spec for n in names):
+            if any((m["dir_specs"].get(n) or []) != spec for n in names):
                 raise ValueError(
                     "mixed partition specs across data dirs; run compact() "
                     "(full) first"
@@ -2824,7 +2609,7 @@ class MergeTable:
                 for leaf in leaves:
                     (rewrite if leaf in hit else carry).append((n, leaf))
             if not rewrite:
-                return base  # nothing in scope: the snapshot stands
+                return None  # nothing in scope: the snapshot stands
             # read EXACTLY the rewrite leaves (explicit paths, so the
             # row partition between rewritten and carried files cannot
             # drift from the classification above), map to the logical
@@ -2846,74 +2631,46 @@ class MergeTable:
 
             # repartition, not coalesce (see compact()'s build note)
             new_df = reduce(DataFrame.unionByName, parts).repartition(target_files)
-            sort = list(m.get("sort_order") or [])
+            staged = self._stage(new_df, spec, m["sort_order"], target_files)
+            # carry side: hardlink untouched leaves into the stage.  Runs
+            # lock-free like the staging scan above, so a concurrent
+            # commit can GC the base snapshot's dirs mid-carry - the
+            # commit loop then rebases, as for a failed staging scan
             try:
-                staged = self._stage(new_df, spec, sort, target_files)
-            except Exception:
-                if self.current_version() != base:
-                    continue
+                for n, leaf in carry:
+                    src = os.path.join(self.path, n, leaf)
+                    dst = os.path.join(self.path, staged, leaf)
+                    os.makedirs(dst, exist_ok=True)
+                    for fn in os.listdir(src):
+                        sp = os.path.join(src, fn)
+                        if not (os.path.isfile(sp) and fn.endswith(".parquet")):
+                            continue
+                        dp = os.path.join(dst, fn)
+                        if os.path.exists(dp):  # same leaf from two dirs
+                            stem, ext = os.path.splitext(fn)
+                            dp = os.path.join(dst, f"{stem}-{n}{ext}")
+                        try:
+                            os.link(sp, dp)
+                        except OSError:
+                            shutil.copy2(sp, dp)  # cross-device fallback
+            except BaseException:
+                self._discard_stage(staged)
                 raise
-            committed = False
-            try:
-                # carry side: hardlink untouched leaves into the stage.
-                # Runs lock-free like the staging scan above, so a
-                # concurrent commit can GC the base snapshot's dirs
-                # mid-carry - FileNotFoundError then means "base moved:
-                # rebase", the same recovery as the staging step (the
-                # finally discards the stage on the way out)
-                try:
-                    for n, leaf in carry:
-                        src = os.path.join(self.path, n, leaf)
-                        dst = os.path.join(self.path, staged, leaf)
-                        os.makedirs(dst, exist_ok=True)
-                        for fn in os.listdir(src):
-                            sp = os.path.join(src, fn)
-                            if not (
-                                os.path.isfile(sp) and fn.endswith(".parquet")
-                            ):
-                                continue
-                            dp = os.path.join(dst, fn)
-                            if os.path.exists(dp):  # same leaf from two dirs
-                                stem, ext = os.path.splitext(fn)
-                                dp = os.path.join(dst, f"{stem}-{n}{ext}")
-                            try:
-                                os.link(sp, dp)
-                            except OSError:
-                                shutil.copy2(sp, dp)  # cross-device fallback
-                except FileNotFoundError:
-                    if self.current_version() != base:
-                        continue  # base GC'd mid-carry: rebase and retry
-                    raise
-                with _commit_lock(self.path):
-                    if self.current_version() == base:
-                        v = self._next_version()
-                        data_dir = self._promote_stage_locked(staged, v)
-                        committed = True
-                        carried_dels = [
-                            {**e, "applies_to": [data_dir]} for e in dels
-                        ]
-                        return self._commit_manifest(
-                            v,
-                            [data_dir],
-                            m["schema"],
-                            spec,
-                            {data_dir: spec},
-                            op="compact",
-                            deletes=carried_dels,
-                        )
-            finally:
-                if not committed:
-                    self._discard_stage(staged)
-        raise CommitConflict(
-            f"compact(where=...) on {self.path} lost 6 optimistic-commit races"
-        )
+            return staged, lambda data_dir, head: {
+                "data_dirs": [data_dir],
+                "dir_specs": {data_dir: spec},
+                # pending equality deletes mask by key: they apply to
+                # the rewritten and the carried rows alike
+                "deletes": [{**e, "applies_to": [data_dir]} for e in dels],
+            }
+
+        return self._optimistic_commit("compact", prepare)
 
     def _data_bytes(self) -> int:
         """Total parquet bytes of the current snapshot (driver-side
         walk of the manifest's data dirs; sizing input for
         :meth:`compact`'s target_mb mode)."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
+        m = self._head()
         total = 0
         for d in _data_dirs(m) if m else []:
             for dirpath, _dirs, files in os.walk(os.path.join(self.path, d)):
@@ -2946,6 +2703,28 @@ class MergeTable:
         shutil.rmtree(self.path, ignore_errors=True)
 
 
+def start_batch_sink(
+    stream_df: DataFrame, checkpoint_dir: str, write_batch, available_now: bool
+):
+    """Start ``stream_df`` into a foreachBatch sink that calls
+    ``write_batch(batch_df, batch_id)`` per micro-batch.  With
+    ``available_now`` the query drains what is available and this
+    returns once it has caught up; otherwise the query runs unbounded
+    and is returned live (awaiting it here would block the caller
+    forever with the handle unreachable), for the caller to stop or
+    await."""
+    writer = (
+        stream_df.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(write_batch)
+    )
+    if available_now:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+    return writer.start()
+
+
 def run_stream_to_table(
     stream_df: DataFrame,
     table: MergeTable,
@@ -2975,19 +2754,7 @@ def run_stream_to_table(
         if compact_every and (batch_id + 1) % compact_every == 0:
             table.compact(batch_df.sparkSession)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()  # bounded drain: returns when caught up
-        return q
-    # continuous trigger: the query is unbounded - awaiting here would
-    # block the caller forever with the handle unreachable; hand the
-    # live query back (caller stops/awaits it)
-    return writer.start()
+    return start_batch_sink(stream_df, checkpoint_dir, upsert, available_now)
 
 
 def apply_changes_stream(
@@ -3049,16 +2816,4 @@ def apply_changes_stream(
         if table.current_version() is not None and dels.limit(1).count():
             table.delete_keys(batch_df.sparkSession, dels)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply_batch)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()  # bounded drain: returns when caught up
-        return q
-    # continuous trigger: the query is unbounded - awaiting here would
-    # block the caller forever with the handle unreachable; hand the
-    # live query back (caller stops/awaits it)
-    return writer.start()
+    return start_batch_sink(stream_df, checkpoint_dir, apply_batch, available_now)

@@ -121,3 +121,24 @@ def test_timed_run_rebuilds_dedup_stage_for_q57_only(monkeypatch):
     harness.best_of(spark, q73, "sf", 2)
     stage = {("app", "sf"): "stage"}
     assert seen == [("q57", {}), ("q57", {}), ("q73", stage), ("q73", stage)]
+
+
+def test_loc_counts_code_lines_only():
+    from tools.loc import code_lines
+
+    src = (
+        '"""Module docstring,\n'
+        'two lines."""\n'
+        "\n"
+        "# a comment\n"
+        "def f(x):\n"
+        '    """Docstring."""\n'
+        "    y = (x +  # trailing comment\n"
+        "         # comment inside an expression\n"
+        "         1)\n"
+        "\n"
+        '    return """not a\n'
+        'docstring"""\n'
+    )
+    # def, the two lines of the y expression, both lines of the string
+    assert code_lines(src) == 5

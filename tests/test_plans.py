@@ -2028,6 +2028,19 @@ def test_q199_lpa_edge_stage_and_final_fold(spark, sf_dir):
     assert len(plan.splitlines()) < 120, "final LPA plan regrew a per-round chain"
 
 
+def test_q199_edge_collect_is_capped(spark, sf_dir, monkeypatch):
+    """q199 collects at most cap + 1 brand edges onto the driver and
+    fails loudly, with the count it saw, when the graph outgrows the
+    cap."""
+    import pytest
+
+    from iceberg_daq_spark.queries import mining
+
+    monkeypatch.setattr(mining, "Q199_DRIVER_EDGE_MAX", 3)
+    with pytest.raises(ValueError, match="collected 4 brand edges"):
+        mining.q199(spark, sf_dir)
+
+
 def test_q200_wilson_single_pass(spark, sf_dir):
     """Ten (n, x) pairs from one partial+final agg over one scan; no
     join; the rank is a TakeOrdered-able sort over 10 rows."""

@@ -1960,3 +1960,77 @@ def test_ancestors_stop_at_expired_manifest(tmp_path, spark):
     os.remove(t._manifest_path(victim))
     truncated = t._ancestors(head, 10)
     assert truncated == chain[:2], (truncated, chain)
+
+
+def test_every_commit_carries_unchanged_manifest_fields(spark, tmp_path):
+    """Each manifest is its parent plus the commit's own changes: with
+    every table property set (keys, partition spec, sort order, bloom
+    columns, a pending equality delete), each commit kind leaves every
+    field it does not change exactly as its parent had it, and keeps
+    the file stats of every data dir it retains."""
+    from iceberg_daq_spark.tablestore import MergeTable
+
+    t = MergeTable(str(tmp_path / "carry"), key_cols=("k",), keep_versions=100)
+    rows = [(i, "ab"[i % 2], i * 10) for i in range(8)]
+    t.merge(spark.createDataFrame(rows, "k int, p string, v int"))
+    t.set_partition_spec("p")
+    t.set_sort_order("v")
+    t.set_bloom_filters("k")
+    t.delete_where(spark, "k = 1", mode="merge-on-read")
+    fields = (
+        "data_dirs", "schema", "partition_spec", "dir_specs", "key_cols",
+        "file_stats", "deletes", "sort_order", "bloom_cols",
+    )
+    data = {"data_dirs", "dir_specs", "file_stats"}
+    rewrite = data | {"schema", "deletes"}
+
+    def manifest():
+        return t._load_manifest(t.current_version())
+
+    def step(fn, changed):
+        prev = manifest()
+        fn()
+        new = manifest()
+        assert new["parent"] == prev["version"]
+        for f in fields:
+            if f not in changed:
+                assert new[f] == prev[f], (new["operation"], f)
+        for d in set(new["data_dirs"]) & set(prev["data_dirs"]):
+            assert new["file_stats"][d] == prev["file_stats"][d]
+        return new
+
+    extra_key = iter(range(100, 200))
+
+    def pending_delete():
+        if not manifest()["deletes"]:
+            keys = spark.createDataFrame([(next(extra_key),)], "k int")
+            step(lambda: t.delete_keys(spark, keys), {"deletes"})
+
+    more = spark.createDataFrame([(20, "a", 200), (21, "b", 210)], "k int, p string, v int")
+    step(lambda: t.append(more), data)
+    step(lambda: t.merge(spark.createDataFrame([(2, "a", 7)], "k int, p string, v int")), rewrite)
+    pending_delete()
+    step(lambda: t.update_where(spark, "k = 4", {"v": "v + 1"}), rewrite)
+    pending_delete()
+    step(lambda: t.delete_where(spark, "k = 5"), rewrite)
+    pending_delete()
+    step(lambda: t.delete_where(spark, "k = 6", mode="merge-on-read"), {"deletes"})
+    step(lambda: t.compact(spark), rewrite)
+    pending_delete()
+    step(lambda: t.compact(spark, where="p = 'a'"), rewrite)
+    target = manifest()
+    step(lambda: t.add_column("w", "int", default=3), {"schema"})
+    step(lambda: t.rename_column("w", "w2"), {"schema"})
+    step(lambda: t.drop_column("w2"), {"schema"})
+    step(lambda: t.set_partition_spec(), {"partition_spec"})
+    step(lambda: t.set_sort_order("k"), {"sort_order"})
+    head = step(lambda: t.set_bloom_filters("v"), {"bloom_cols"})
+
+    # rollback restores the target snapshot's fields; the bloom columns
+    # stay the head's
+    t.rollback(target["version"])
+    new = manifest()
+    assert new["parent"] == target["version"]
+    assert new["abandoned_head"] == head["version"]
+    for f in fields:
+        assert new[f] == (head if f == "bloom_cols" else target)[f], f
