@@ -81,6 +81,8 @@ def main() -> None:
 
     spark = harness.start("iceberg_daq_bench", sf_dir)
     cpus = spark.sparkContext.defaultParallelism
+    probe_sec = harness.probe(spark, sf_dir, repeat)
+    print(f"# host probe: {probe_sec:.3f}s", file=sys.stderr)
 
     timings: dict[str, float] = {}
     for name in names:
@@ -138,6 +140,8 @@ def main() -> None:
     )
     floor_one = harness.best_of(spark, lambda s, _: s.range(1), sf_dir, 5)
     out["floor_sec"] = round(len(timings) * floor_one, 3)
+    # also an addition: the host probe taken before the suite
+    out["probe_sec"] = probe_sec
     if streaming:
         out["streaming"] = streaming
     if regressions:

@@ -131,6 +131,19 @@ def synth_image_blobs(docs: DataFrame) -> DataFrame:
 _MAX_BATCH_PAYLOAD = 2**31 - 1
 
 
+def _require_magic(buf: np.ndarray, offsets: np.ndarray, magic: bytes) -> None:
+    """Raise ValueError unless every payload of a packed Arrow binary
+    buffer (row i spans ``offsets[i]:offsets[i + 1]``) starts with the
+    format ``magic``: a payload of another format would otherwise
+    decode as garbage, or be rewritten as a valid-looking image."""
+    starts = offsets[:-1]
+    if (offsets[1:] - starts < len(magic)).any():
+        raise ValueError(f"payload shorter than the {magic.decode()} magic")
+    for j, b in enumerate(magic):
+        if (buf[starts + j] != b).any():
+            raise ValueError(f"not {magic.decode()} payloads")
+
+
 def _payload_chunks(starts, ends):
     """Row-range chunks [(lo, hi), ...] such that each chunk's packed
     payload bytes fit Arrow int32 binary offsets."""
@@ -233,11 +246,7 @@ def decode_image_stats(blobs: DataFrame) -> DataFrame:
             ].astype(np.int64)
             buf = np.frombuffer(pay.buffers()[2], dtype=np.uint8)
             starts, ends = offsets[:-1], offsets[1:]
-            magic = np.frombuffer(_IMG_MAGIC, dtype=np.uint8)
-            for j in range(4):
-                assert np.array_equal(
-                    buf[starts + j], np.full(n, magic[j])
-                ), "not FIMG payloads"
+            _require_magic(buf, offsets, _IMG_MAGIC)
 
             # <HHH header: little-endian u16 triplets at bytes 4..10
             def u16(at: np.ndarray) -> np.ndarray:
@@ -310,6 +319,7 @@ def resize_images(blobs: DataFrame, out_w: int, out_h: int) -> DataFrame:
                 pay.offset : pay.offset + n + 1
             ].astype(np.int64)
             buf = np.frombuffer(pay.buffers()[2], dtype=np.uint8)
+            _require_magic(buf, offsets, _IMG_MAGIC)
             starts = offsets[:-1]
 
             def u16(at: np.ndarray) -> np.ndarray:
@@ -432,7 +442,8 @@ def sample_video_frames(blobs: DataFrame, every_k: int = 5) -> DataFrame:
         for pdf in batches:
             rows = []
             for d, blob in zip(pdf["doc_id"].to_numpy(), pdf["payload"]):
-                assert bytes(blob[:4]) == _VID_MAGIC, "not a FVID payload"
+                if bytes(blob[:4]) != _VID_MAGIC:
+                    raise ValueError("not a FVID payload")
                 nf, w, h = _struct.unpack("<HHH", bytes(blob[4:10]))
                 fsz = w * h
                 px = np.frombuffer(blob, dtype=np.uint8, offset=10)
@@ -551,11 +562,7 @@ def decode_audio_stats(blobs: DataFrame) -> DataFrame:
             ].astype(np.int64)
             buf = np.frombuffer(pay.buffers()[2], dtype=np.uint8)
             starts = offsets[:-1]
-            magic = np.frombuffer(_AUD_MAGIC, dtype=np.uint8)
-            for j in range(4):
-                assert np.array_equal(
-                    buf[starts + j], np.full(n, magic[j])
-                ), "not FAUD payloads"
+            _require_magic(buf, offsets, _AUD_MAGIC)
             ns = np.zeros(n, dtype=np.int64)
             for j in range(4):
                 ns |= buf[starts + 4 + j].astype(np.int64) << (8 * j)
@@ -1000,11 +1007,7 @@ def phash64(blobs: DataFrame) -> DataFrame:
             ].astype(np.int64)
             buf = np.frombuffer(pay.buffers()[2], dtype=np.uint8)
             starts = offsets[:-1]
-            magic = np.frombuffer(_IMG_MAGIC, dtype=np.uint8)
-            for j in range(4):
-                assert np.array_equal(
-                    buf[starts + j], np.full(n, magic[j])
-                ), "not FIMG payloads"
+            _require_magic(buf, offsets, _IMG_MAGIC)
 
             def u16(at: np.ndarray) -> np.ndarray:
                 return buf[at].astype(np.int64) | (buf[at + 1].astype(np.int64) << 8)

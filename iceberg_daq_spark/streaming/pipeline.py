@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from itertools import accumulate
 from typing import Any
 
 import pandas as pd
@@ -58,16 +59,6 @@ def ta_stream(
     return plan.ta_windows(hits, window_ticks=window_ticks)
 
 
-_td_out_schema = T.StructType(
-    [
-        T.StructField("src_id", T.IntegerType()),
-        T.StructField("td_start_tick", T.LongType()),
-        T.StructField("td_end_tick", T.LongType()),
-        T.StructField("n_tps", T.LongType()),
-        T.StructField("n_tas", T.LongType()),
-    ]
-)
-
 _td_state_schema = T.StructType(
     [
         T.StructField("start_tick", T.LongType()),
@@ -83,27 +74,24 @@ def _merge_td_func(
     flush_horizon_ticks: int,
     max_td_ticks: int = MLT_MAX_TD_TICKS,
 ):
-    """State machine per src_id: extend the open decision while TAs
-    overlap (within gap), emit it when a gap appears or the max-TD-length
-    cap is hit (A27); the open decision flushes when the event-time
-    watermark passes its end + flush horizon (no TA can extend it any
-    more - the deterministic analog of the mlt buffer timeout).
+    """State function per src_id around the batch twin's fold
+    (plan.fold_decisions, A27): the open decision lives in state as one
+    fold item; every closed decision is emitted; the open one flushes
+    when the event-time watermark passes its end + flush horizon (no TA
+    can extend it any more - the deterministic analog of the mlt buffer
+    timeout).
 
-    Cross-batch disorder: the batch's TAs and the OPEN island from
-    state fold together in ONE globally-sorted gaps-and-islands pass
-    (the open island participates at its sorted position, exactly
-    where the batch-twin fold would have its running island), so a
-    group of stragglers that only CONNECTS to the open island through
-    each other still merges - a row-by-row test against the island
-    would drop the early rows of the group before the connecting row
-    arrived (found in review).  Islands that complete entirely BEFORE
-    the fold reaches the open island belong to ALREADY-EMITTED
-    decisions: append mode cannot retract, so they are dropped rather
-    than emitted as overlapping fragments (flush_tail's batch
-    complement is the documented repair).  The max-TD cap is applied
-    inside the same fold, mirroring the batch twin's split points
+    Cross-batch disorder: the batch's TAs and the open decision fold
+    together in ONE sorted pass (the open decision sits at its sorted
+    position, exactly where the batch fold would have its running
+    decision), so stragglers that only CONNECT to it through each other
+    still merge, and the max-TD cap splits where the batch fold splits
     (the cap makes merging non-associative, so folding the batch
-    separately first would diverge)."""
+    separately first would diverge).  Decisions that close BEFORE the
+    fold reaches the open one hold only stragglers of already-emitted
+    decisions: append mode cannot retract, so they are dropped rather
+    than emitted as overlapping fragments (flush_tail's batch complement
+    is the documented repair)."""
 
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -111,63 +99,32 @@ def _merge_td_func(
         (src_id,) = key
         if state.hasTimedOut:
             if state.exists:
-                s, e, n_tps, n_tas = state.get
+                open_td = state.get
                 state.remove()
-                yield pd.DataFrame(
-                    [{"src_id": src_id, "td_start_tick": s, "td_end_tick": e, "n_tps": n_tps, "n_tas": n_tas}]
-                )
+                yield plan.td_frame(src_id, [open_td])
             return
 
         rows = pd.concat(list(pdfs), ignore_index=True)
-        # items: (first, last, n_tps, n_tas, holds_state); the open
-        # island from state is one item folded at its sorted position
-        items = [
-            (r.first_tick, r.last_tick, r.n_tps, 1, False)
-            for r in rows.itertuples(index=False)
-        ]
-        had_state = state.exists
-        if had_state:
-            s, e, n_tps, n_tas = state.get
-            items.append((s, e, n_tps, n_tas, True))
-        items.sort(key=lambda t: (t[0], t[1]))
-        out = []
-        cur = None  # [first, last, n_tps, n_tas, holds_state]
-        seen_state = not had_state  # no state -> nothing to drop
-        for first, last, tps, tas, is_state in items:
-            if cur is None:
-                cur = [first, last, tps, tas, is_state]
-            elif (
-                first <= cur[1] + max_gap_ticks
-                and max(cur[1], last) - min(cur[0], first) <= max_td_ticks
-            ):
-                cur[0] = min(cur[0], first)
-                cur[1] = max(cur[1], last)
-                cur[2] += tps
-                cur[3] += tas
-                cur[4] = cur[4] or is_state
-            else:
-                if cur[4] or seen_state:
-                    # the open island just closed, or a later island
-                    # did: emit.  (Pre-state islands fall through to
-                    # the drop below.)
-                    seen_state = True
-                    out.append(
-                        {"src_id": src_id, "td_start_tick": cur[0], "td_end_tick": cur[1], "n_tps": cur[2], "n_tas": cur[3]}
-                    )
-                # else: island completed before the open island -
-                # straggler fragment of an emitted decision: drop
-                cur = [first, last, tps, tas, is_state]
-        if cur is not None:
-            # the final island is always the new open decision: the
-            # state item is consumed by the fold, so it either sits in
-            # cur (cur[4]) or closed earlier and was emitted
-            state.update(tuple(cur[:4]))
-            # flush once the watermark proves no TA can extend this
-            # decision; ticks are epoch-based (T0_TICKS), /62500 -> ms
-            timeout_ms = (cur[1] + flush_horizon_ticks) // 62_500 + 1
-            state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
-        if out:
-            yield pd.DataFrame(out)
+        items = list(zip(rows["first_tick"], rows["last_tick"], rows["n_tps"], [1] * len(rows)))
+        # n_pre: TAs the fold takes before the open decision (it goes
+        # last, so the stable sort puts it after any equal item)
+        n_pre = 0
+        if state.exists:
+            open_td = tuple(state.get)
+            n_pre = sum(item <= open_td for item in items)
+            items.append(open_td)
+        decisions = plan.fold_decisions(items, max_gap_ticks, max_td_ticks)
+        # leading decisions made only of those n_pre TAs closed before
+        # the fold reached the open one: drop them
+        n_drop = sum(c <= n_pre for c in accumulate(d[3] for d in decisions))
+        *closed, open_td = decisions[n_drop:]
+        state.update(tuple(open_td))
+        # flush once the watermark proves no TA can extend this
+        # decision; ticks are epoch-based (T0_TICKS), /62500 -> ms
+        timeout_ms = (open_td[1] + flush_horizon_ticks) // 62_500 + 1
+        state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
+        if closed:
+            yield plan.td_frame(src_id, closed)
 
     return fn
 
@@ -201,7 +158,7 @@ def merge_decisions_stream(
             _merge_td_func(
                 max_gap_ticks, max_gap_ticks + window_ticks, max_td_ticks
             ),
-            outputStructType=_td_out_schema,
+            outputStructType=plan.TD_SCHEMA,
             stateStructType=_td_state_schema,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,

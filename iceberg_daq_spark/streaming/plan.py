@@ -1,9 +1,12 @@
 """The data-plane transforms, batch/streaming agnostic.
 
-Each function is DataFrame -> DataFrame and carries the reference
+Each transform is DataFrame -> DataFrame and carries the reference
 semantics it implements.  Batch golden tests apply them to a plain
 DataFrame; pipeline.py applies the same functions to a readStream
-DataFrame with watermarks - identical Catalyst plans either way.
+DataFrame with watermarks - identical Catalyst plans either way.  The
+one stage that cannot be a shared plan, the capped TD merge, is one
+shared pure fold (fold_decisions) that the batch merge and the
+streaming state function both run.
 """
 
 from __future__ import annotations
@@ -36,43 +39,12 @@ _decode_schema = T.StructType(
 
 
 def decode_frames(frames: DataFrame) -> DataFrame:
-    """Binary frame payload -> per-channel samples (reference A2's
-    decode edge; the only pandas stage in the plane).
-
-    Arrow-batched mapInPandas: numpy unpacks the big-endian uint16
-    payload for a whole batch at once.  Output channel id is globally
-    unique: src_id * N_CHANNELS + lane (A21 channel-map analog).
-    """
-
-    def unpack(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # payloads are fixed-width (N_CHANNELS big-endian uint16):
-            # one join + one frombuffer per Arrow batch instead of one
-            # frombuffer per frame (the per-row loop was the plane's
-            # hot spot at 500k frames/s)
-            adc = (
-                np.frombuffer(b"".join(pdf["payload"]), dtype=">u2")
-                .reshape(len(pdf), -1)
-                .astype(np.int32)
-            )
-            n, width = adc.shape
-            yield pd.DataFrame(
-                {
-                    "src_id": np.repeat(pdf["src_id"].to_numpy(), width),
-                    "seq": np.repeat(pdf["seq"].to_numpy(), width),
-                    "ts_ticks": np.repeat(pdf["ts_ticks"].to_numpy(), width),
-                    "ts": np.repeat(pdf["ts"].to_numpy(), width),
-                    "channel": (
-                        np.repeat(pdf["src_id"].to_numpy(), width) * N_CHANNELS
-                        + np.tile(np.arange(width, dtype=np.int32), n)
-                    ).astype(np.int32),
-                    "adc": adc.reshape(-1),
-                }
-            )
-
-    return frames.mapInPandas(unpack, _decode_schema)
+    """Binary frame payload -> every per-channel sample (reference A2's
+    decode edge): the fused decoder with a threshold below the ADC
+    range, so one implementation serves both the all-samples and the
+    hits-only decode.  Output channel id is globally unique: src_id *
+    N_CHANNELS + lane (A21 channel-map analog)."""
+    return decode_hits(frames, threshold=-1)
 
 
 def decode_hits(
@@ -83,10 +55,12 @@ def decode_hits(
     """Fused decode + TPG (A2+A14): unpack payloads and threshold-filter
     INSIDE the numpy stage, so only hits (~0.2% of samples at the
     reference's noise/threshold ratio) cross the Arrow boundary.
-    Provably equal to find_hits(decode_frames(...)) - asserted in
-    tests - but ~10x the throughput: the reference makes the same move
-    by generating TPs inside the readout process rather than shipping
-    raw samples to the trigger (SURVEY A14).
+    Equal to find_hits(decode_frames(...)), the Catalyst filter over
+    every sample - asserted in tests - but only hits are materialized:
+    the reference makes the same move by generating TPs inside the
+    readout process rather than shipping raw samples to the trigger
+    (SURVEY A14).  The ADC samples are unsigned, so ``threshold=-1``
+    keeps every sample (decode_frames).
 
     mapInArrow, not mapInPandas: an Arrow->pandas conversion would
     materialize one Python ``bytes`` object per frame for the payload
@@ -165,6 +139,24 @@ def find_hits(samples: DataFrame, threshold: int = TPG_THRESHOLD, channel_mask: 
     return hits
 
 
+_TA_COLS = ("n_tps", "n_channels", "sum_adc", "first_tick", "last_tick")
+
+
+def _ta_aggs() -> list[Column]:
+    """The per-window TP aggregates of ta_windows and ta_sessions, named
+    _TA_COLS.  size(collect_set) not countDistinct: distinct
+    aggregates are unsupported in streaming aggregations, this form runs
+    identically in both modes (channel fanout per stream is bounded at
+    N_CHANNELS, so the set stays small)."""
+    return [
+        F.count("*").alias("n_tps"),
+        F.size(F.collect_set("channel")).alias("n_channels"),
+        F.sum("adc").alias("sum_adc"),
+        F.min("ts_ticks").alias("first_tick"),
+        F.max("ts_ticks").alias("last_tick"),
+    ]
+
+
 def ta_windows(hits: DataFrame, window_ticks: int = TA_WINDOW_TICKS) -> DataFrame:
     """Trigger-activity formation (A26): tumbling windows over hits,
     emitted when enough distinct channels fire or summed ADC crosses
@@ -184,17 +176,7 @@ def ta_windows(hits: DataFrame, window_ticks: int = TA_WINDOW_TICKS) -> DataFram
     w = F.window("ts", f"{win_us} microseconds")
     return (
         hits.groupBy(F.col("src_id"), w.alias("w"))
-        .agg(
-            F.count("*").alias("n_tps"),
-            # size(collect_set) not countDistinct: distinct aggregates
-            # are unsupported in streaming aggregations, this form runs
-            # identically in both modes (channel fanout per stream is
-            # bounded at N_CHANNELS, so the set stays small)
-            F.size(F.collect_set("channel")).alias("n_channels"),
-            F.sum("adc").alias("sum_adc"),
-            F.min("ts_ticks").alias("first_tick"),
-            F.max("ts_ticks").alias("last_tick"),
-        )
+        .agg(*_ta_aggs())
         .filter(
             (F.col("n_channels") >= TA_N_CHANNELS) | (F.col("sum_adc") >= TA_ADC_THRESHOLD)
         )
@@ -202,11 +184,7 @@ def ta_windows(hits: DataFrame, window_ticks: int = TA_WINDOW_TICKS) -> DataFram
             "src_id",
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
-            "n_tps",
-            "n_channels",
-            "sum_adc",
-            "first_tick",
-            "last_tick",
+            *_TA_COLS,
         )
     )
 
@@ -220,22 +198,12 @@ def ta_sessions(hits: DataFrame, gap: str = "1 second") -> DataFrame:
     watermark passes session_end + gap)."""
     return (
         hits.groupBy(F.col("src_id"), F.session_window("ts", gap).alias("w"))
-        .agg(
-            F.count("*").alias("n_tps"),
-            F.size(F.collect_set("channel")).alias("n_channels"),
-            F.sum("adc").alias("sum_adc"),
-            F.min("ts_ticks").alias("first_tick"),
-            F.max("ts_ticks").alias("last_tick"),
-        )
+        .agg(*_ta_aggs())
         .select(
             "src_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
-            "n_tps",
-            "n_channels",
-            "sum_adc",
-            "first_tick",
-            "last_tick",
+            *_TA_COLS,
         )
     )
 
@@ -251,6 +219,46 @@ def prescale_hash(df: DataFrame, n: int = PRESCALE, key_cols: tuple[str, ...] = 
     return df.filter(F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n)) == 0)
 
 
+TD_SCHEMA = T.StructType(
+    [
+        T.StructField("src_id", T.IntegerType()),
+        T.StructField("td_start_tick", T.LongType()),
+        T.StructField("td_end_tick", T.LongType()),
+        T.StructField("n_tps", T.LongType()),
+        T.StructField("n_tas", T.LongType()),
+    ]
+)
+
+
+def fold_decisions(items, max_gap_ticks: int, max_td_ticks: int) -> list[list]:
+    """The capped trigger-decision merge of one src_id as a pure fold,
+    shared by merge_decisions(max_td_ticks=...) and the streaming state
+    function pipeline._merge_td_func.
+
+    ``items`` are (first, last, n_tps, n_tas) tuples: one per TA
+    (n_tas 1) or an already-open decision.  Taken in sorted order
+    (first, last, then the counts, so the result does not depend on
+    input order), an item extends the current decision while it starts
+    within ``max_gap_ticks`` of the decision's end and ends within
+    ``max_td_ticks`` of its start (mlt_max_td_length); otherwise it
+    opens the next decision.  Returns the decisions as [start, end,
+    n_tps, n_tas] lists, in order."""
+    out: list[list] = []
+    for first, last, n_tps, n_tas in sorted(items):
+        if out and first <= out[-1][1] + max_gap_ticks and last - out[-1][0] <= max_td_ticks:
+            out[-1][1] = max(out[-1][1], last)
+            out[-1][2] += n_tps
+            out[-1][3] += n_tas
+        else:
+            out.append([first, last, n_tps, n_tas])
+    return out
+
+
+def td_frame(src_id: int, decisions) -> pd.DataFrame:
+    """One src_id's decisions as a TD_SCHEMA pandas frame."""
+    return pd.DataFrame([(src_id, *d) for d in decisions], columns=TD_SCHEMA.names)
+
+
 def merge_decisions(
     tas: DataFrame, max_gap_ticks: int, max_td_ticks: int | None = None
 ) -> DataFrame:
@@ -263,18 +271,29 @@ def merge_decisions(
     (applyInPandasWithState with the mlt buffer-timeout semantics).
 
     ``max_td_ticks`` is the mlt_max_td_length cap (:241): a decision
-    that would exceed it is closed and a new one opened - the same rule
-    the streaming state machine applies, so streamed + tail == batch
-    even on unbroken activity.  The cap couples each decision's extent
-    to its own running start (non-associative), so the capped form is a
-    per-src_id sequential fold via applyInPandas; post-TA decision
-    rates are Hz per stream, so each group is tiny at any scale.  The
-    default (None) keeps the pure window-function plan.
+    that would exceed it is closed and a new one opened.  The cap
+    couples each decision's extent to its own running start
+    (non-associative), so the capped form is a per-src_id sequential
+    fold via applyInPandas - fold_decisions, the same fold the
+    streaming state function runs, so streamed + tail == batch even on
+    unbroken activity.  Post-TA decision rates are Hz per stream, so
+    each group is tiny at any scale.  The default (None) keeps the pure
+    window-function plan.
     """
     from pyspark.sql import Window
 
     if max_td_ticks is not None:
-        return _merge_decisions_capped(tas, max_gap_ticks, max_td_ticks)
+
+        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+            items = zip(pdf["first_tick"], pdf["last_tick"], pdf["n_tps"], [1] * len(pdf))
+            decisions = fold_decisions(items, max_gap_ticks, max_td_ticks)
+            return td_frame(int(pdf["src_id"].iloc[0]), decisions)
+
+        return (
+            tas.select("src_id", "first_tick", "last_tick", "n_tps")
+            .groupBy("src_id")
+            .applyInPandas(fold, TD_SCHEMA)
+        )
 
     w_prev = (
         Window.partitionBy("src_id")
@@ -304,60 +323,3 @@ def merge_decisions(
         .drop("island")
     )
 
-
-def _merge_decisions_capped(
-    tas: DataFrame, max_gap_ticks: int, max_td_ticks: int
-) -> DataFrame:
-    """merge_decisions with the mlt_max_td_length cap: sequential fold
-    per src_id (the cap rule references the open decision's start, so
-    it cannot be a window function).  Mirrors pipeline._merge_td_func's
-    extend condition exactly."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("src_id", T.IntegerType()),
-            T.StructField("td_start_tick", T.LongType()),
-            T.StructField("td_end_tick", T.LongType()),
-            T.StructField("n_tps", T.LongType()),
-            T.StructField("n_tas", T.LongType()),
-        ]
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["first_tick", "last_tick"])
-        src_id = int(pdf["src_id"].iloc[0])
-        out, cur = [], None
-        for r in pdf.itertuples(index=False):
-            if cur is not None and (
-                r.first_tick <= cur[1] + max_gap_ticks
-                and r.last_tick - cur[0] <= max_td_ticks
-            ):
-                cur[1] = max(cur[1], r.last_tick)
-                cur[2] += r.n_tps
-                cur[3] += 1
-            else:
-                if cur is not None:
-                    out.append(cur)
-                cur = [r.first_tick, r.last_tick, r.n_tps, 1]
-        if cur is not None:
-            out.append(cur)
-        return pd.DataFrame(
-            [
-                {
-                    "src_id": src_id,
-                    "td_start_tick": s,
-                    "td_end_tick": e,
-                    "n_tps": n,
-                    "n_tas": c,
-                }
-                for s, e, n, c in out
-            ]
-        )
-
-    return (
-        tas.select("src_id", "first_tick", "last_tick", "n_tps")
-        .groupBy("src_id")
-        .applyInPandas(fold, schema)
-    )

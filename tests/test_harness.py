@@ -52,6 +52,7 @@ def _record(n_queries: int, n_regressions: int) -> dict:
         "cpus": 32,
         "subset_q01_q61": 123.456,
         "floor_sec": 31.123,
+        "probe_sec": 4.321,
         "streaming": {
             "frames": 3840000,
             "streams": 24,
@@ -78,6 +79,13 @@ def test_emit_line_fits_window_and_keeps_queries():
     got = json.loads(line)
     assert got["queries"]
     assert got["regressions_dropped"] > 0
+
+
+def test_emit_line_keeps_probe_sec():
+    """The host probe survives every shrink step of the overflow replay."""
+    for n_queries, n_regressions in ((5, 2), (262, 60), (262, 0)):
+        got = json.loads(harness.emit_line(_record(n_queries, n_regressions)))
+        assert got["probe_sec"] == 4.321
 
 
 class _FakeDF:
@@ -121,6 +129,24 @@ def test_timed_run_rebuilds_dedup_stage_for_q57_only(monkeypatch):
     harness.best_of(spark, q73, "sf", 2)
     stage = {("app", "sf"): "stage"}
     assert seen == [("q57", {}), ("q57", {}), ("q73", stage), ("q73", stage)]
+
+
+def test_probe_times_q01_q43_q44(monkeypatch):
+    from types import SimpleNamespace
+
+    runs = []
+
+    def make(name):
+        def fn(spark, sf_dir):
+            runs.append(name)
+            return _FakeDF()
+
+        return SimpleNamespace(fn=fn)
+
+    specs = {n: make(n) for n in ("q01_a", "q02_b", "q43_c", "q44_d", "q440_e")}
+    monkeypatch.setattr(harness, "all_queries", lambda: specs)
+    assert harness.probe(_FakeSpark(), "sf", 2) >= 0
+    assert runs == ["q01_a"] * 2 + ["q43_c"] * 2 + ["q44_d"] * 2
 
 
 def test_loc_counts_code_lines_only():

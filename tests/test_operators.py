@@ -521,6 +521,27 @@ def test_multimodal_resize_semantics(spark, sf_dir):
         assert (got == px[yi, xi, :]).all(), doc_id
 
 
+def test_multimodal_wrong_magic_raises(spark):
+    """A payload that is not FIMG raises ValueError in the image decode
+    and in resize (which used to rewrite whatever bytes it received), and
+    the check is no assert that ``python -O`` would strip.  A payload
+    shorter than the magic raises the same way instead of an IndexError."""
+    import numpy as np
+    from pyspark.errors import PythonException
+
+    from iceberg_daq_spark.operators import multimodal as mm
+
+    blobs = spark.createDataFrame(
+        [(1, b"FAUD" + bytes(16))], "doc_id long, payload binary"
+    )
+    for df in (mm.decode_image_stats(blobs), mm.resize_images(blobs, 4, 4)):
+        with pytest.raises(PythonException, match="ValueError: not FIMG payloads"):
+            df.collect()
+    buf = np.frombuffer(b"FIMGxxFI", dtype=np.uint8)
+    with pytest.raises(ValueError, match="shorter than the FIMG magic"):
+        mm._require_magic(buf, np.array([0, 6, 8]), mm._IMG_MAGIC)
+
+
 def test_payload_chunks_respect_int32_offset_limit(monkeypatch):
     """Arrow binary offsets are int32: batches whose packed payload
     exceeds 2^31-1 bytes must split at row boundaries (verified with a

@@ -2634,3 +2634,25 @@ def test_q230_no_redundant_distinct(spark, sf_dir):
 
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 8, plan[:2000]
     assert "collect_set" in plan
+
+
+def test_decode_is_one_map_in_arrow_over_the_scan(spark, tmp_path):
+    """One decoder: the all-samples decode (decode_frames) and the fused
+    decode + TPG (decode_hits) each plan as a single MapInArrow directly
+    over the frame scan, with no MapInPandas stage."""
+    import re
+
+    from iceberg_daq_spark.streaming import plan as dplan
+    from iceberg_daq_spark.streaming.emulator import frame_plan, with_packed_payload
+
+    path = str(tmp_path / "frames")
+    with_packed_payload(frame_plan(spark, 4, [0])).write.parquet(path)
+    frames = spark.read.parquet(path)
+    for df in (dplan.decode_frames(frames), dplan.decode_hits(frames)):
+        physical = df._jdf.queryExecution().executedPlan().toString()
+        ops = [
+            re.sub(r"^[\s+\-:|]*(\*\(\d+\)\s*)?", "", line).split(" ")[0]
+            for line in physical.splitlines()
+        ]
+        assert ops == ["MapInArrow", "ColumnarToRow", "FileScan"], physical
+        assert "MapInPandas" not in physical

@@ -82,6 +82,49 @@ def test_merge_decisions_matches_python_reference(_spark, tas):
     assert got_cap == want_cap
 
 
+def _stream_merge(tas: list[tuple[int, int, int]], cap: int) -> list[tuple]:
+    """The streaming TD state function fed ``tas`` as one micro-batch:
+    its emitted decisions plus the open decision left in state."""
+    from iceberg_daq_spark.streaming.pipeline import _merge_td_func
+    from tests.test_streaming import _drive_merge, _FakeState
+
+    fn = _merge_td_func(max_gap_ticks=GAP, flush_horizon_ticks=GAP, max_td_ticks=cap)
+    state = _FakeState()
+    out = [
+        (r["td_start_tick"], r["td_end_tick"], r["n_tps"], r["n_tas"])
+        for r in _drive_merge(fn, state, tas)
+    ]
+    return [tuple(map(int, d)) for d in out + [state.get]]
+
+
+@given(tas=ta_lists)
+@settings(max_examples=200, deadline=None)
+def test_streaming_merge_state_matches_python_reference(tas):
+    """Spark-free: the streaming state function agrees with the capped
+    reference fold on random TA sets.  Durations reach 500 against a
+    400-tick cap, so TAs longer than the cap occur."""
+    rows = [(f, f + d, n) for f, d, n in tas]
+    assert sorted(_stream_merge(rows, cap=400)) == sorted(_ref_merge(rows, cap=400))
+
+
+def test_ta_longer_than_cap_merges_alike_in_batch_and_stream(_spark):
+    """A TA longer than the max-TD cap absorbs a TA nested inside it,
+    in the batch merge and in the streaming state function alike."""
+    tas = [(0, 500, 1), (10, 20, 1)]
+    want = [(0, 500, 2, 2)]
+    assert _ref_merge(tas, cap=400) == want
+    df = _spark.createDataFrame(
+        [(0, f, l, n) for f, l, n in tas],
+        "src_id int, first_tick long, last_tick long, n_tps long",
+    )
+    got = [
+        (r["td_start_tick"], r["td_end_tick"], r["n_tps"], r["n_tas"])
+        for r in plan.merge_decisions(df, max_gap_ticks=GAP, max_td_ticks=400).collect()
+    ]
+    assert got == want
+    assert _stream_merge(tas, cap=400) == want
+
+
 merge_steps = st.lists(
     st.lists(
         st.tuples(st.integers(0, 6), st.integers(0, 9)),  # (key, value)

@@ -781,7 +781,7 @@ def test_merge_td_property_streamed_equals_batch_fold():
         for f, l, t in sorted(rows, key=lambda r: (r[0], r[1])):
             if cur is None:
                 cur = [f, l, t, 1]
-            elif f <= cur[1] + gap and max(cur[1], l) - min(cur[0], f) <= cap:
+            elif f <= cur[1] + gap and l - cur[0] <= cap:
                 cur[0] = min(cur[0], f)
                 cur[1] = max(cur[1], l)
                 cur[2] += t

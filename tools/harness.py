@@ -11,6 +11,8 @@ once:
   run_once      ONE timed execution: fn(spark, sf_dir) -> noop sink ->
                 clearCache, with the q57 dedup-stage reset
   best_of       best-of-N over run_once
+  probe         the host probe: best-of-N q01 + q43 + q44, run before
+                the suite
   plan_of       the formatted physical plan text of a DataFrame
   emit_line     the bench's one-line JSON, shrunk to fit the tail window
   write_json    an artifact file in the repo's indent-1 JSON layout
@@ -103,6 +105,24 @@ def best_of(
     the steady-state cost), so best-of-N reports what a warmed cluster
     would see."""
     return min(run_once(spark, fn, sf_dir, gc_between) for _ in range(repeat))
+
+
+# a scan-filter (q01), a banded SimHash pair join (q43) and a
+# broadcast-matrix cosine top-k in Python (q44): scan, shuffle and
+# Python-worker cost in one number
+PROBE_QUERIES = ("q01_", "q43_", "q44_")
+
+
+def probe(spark, sf_dir: str, repeat: int) -> float:
+    """Host probe: the summed best-of-``repeat`` seconds of
+    PROBE_QUERIES.  Timed before the suite, it reads how fast the host
+    runs fixed work right now, so a suite total can be told apart from
+    host noise."""
+    specs = all_queries()
+    return round(
+        sum(best_of(spark, specs[n].fn, sf_dir, repeat) for n in match_queries(PROBE_QUERIES)),
+        3,
+    )
 
 
 def plan_of(df) -> str:
